@@ -44,7 +44,7 @@ builder-specific rules:
 - ORDER BY / LIMIT / OFFSET appear only as a final total-order wrapper
   compared as a row SEQUENCE.
 
-Deterministic by seed. Used by tools/builder_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py builder (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus in CI).
 """
 
@@ -676,6 +676,21 @@ class ProgramGen:
         return Plan(make, sql, p.cols, code, ordered=True)
 
     # -- top level ----------------------------------------------------------
+    def case(self) -> cf.OracleCase:
+        """``plan()`` as an OracleCase; the builder-call trace is the
+        case's kind, so a mismatch record is its own repro."""
+        p = self.plan()
+
+        def spark_build(spark):
+            # select plan.cols explicitly: the SQL rendering lists
+            # columns in plan.cols order, while Spark's own output
+            # order can differ (natural/USING joins put shared columns
+            # in LEFT-column order, not sampled-key order) — column
+            # order is not part of the compared contract, values are
+            return p.make(spark).build().select(*p.cols)
+
+        return cf.OracleCase(p.code, spark_build, p.sql, p.ordered)
+
     def plan(self) -> Plan:
         p = self._base()
         n_steps = self.rng.randint(1, 3)
@@ -721,53 +736,3 @@ class ProgramGen:
         if self.rng.random() < 0.2:
             p = self._ordered_wrap(p)
         return p
-
-
-def run_builder_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    """Generate ``n`` builder programs from ``seed``; run the builder
-    rendering on Spark and the SQL rendering on DuckDB; return
-    mismatches (empty == clean). Engine/builder errors count as
-    mismatches — the grammar stays inside both contracts."""
-    gen = ProgramGen(seed)
-    mismatches = []
-    for i in range(n):
-        plan = gen.plan()
-        try:
-            # select plan.cols explicitly: the SQL rendering lists
-            # columns in plan.cols order, while Spark's own output
-            # order can differ (natural/USING joins put shared columns
-            # in LEFT-column order, not sampled-key order) — column
-            # order is not part of the compared contract, values are
-            df = plan.make(spark).build().select(*plan.cols)
-            got = cf.canon_rows(
-                [tuple(r) for r in df.collect()], ordered=plan.ordered
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "code": plan.code, "sql": plan.sql,
-                 "error": f"spark/builder: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(plan.sql).fetchall(), ordered=plan.ordered
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "code": plan.code, "sql": plan.sql,
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "code": plan.code,
-                    "sql": plan.sql,
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:3],
-                    "duck_head": want[:3],
-                }
-            )
-    return mismatches

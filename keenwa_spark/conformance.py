@@ -23,7 +23,9 @@ proven separately (SCALE.md, tests/test_plan_shape.py).
 from __future__ import annotations
 
 import datetime
+import itertools
 import math
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 # ---------------------------------------------------------------------------
@@ -804,3 +806,106 @@ def run_case(spark, duck, case: Case) -> tuple[list, list]:
     spark_rows = [tuple(r) for r in spark.sql(case.sql).collect()]
     duck_rows = duck.execute(case.duck_sql or case.sql).fetchall()
     return canon_rows(spark_rows, case.ordered), canon_rows(duck_rows, case.ordered)
+
+
+# ---------------------------------------------------------------------------
+# Seeded cross-engine fuzz harness: one compare loop for every generator
+# family (keenwa's single seeded case runner, reference
+# src/sql/testing/runner.rs:9-80, executed on both engines)
+# ---------------------------------------------------------------------------
+
+#: Optimizer regimes: AQE x CBO x broadcast {off, default}. Each changes
+#: which physical plan wins; results must not.
+REGIME_GRID: list[dict[str, str]] = [
+    {
+        "spark.sql.adaptive.enabled": str(aqe).lower(),
+        "spark.sql.cbo.enabled": str(cbo).lower(),
+        "spark.sql.autoBroadcastJoinThreshold": bcast,
+    }
+    for aqe, cbo, bcast in itertools.product(
+        (True, False), (True, False), ("-1", "10485760")
+    )
+]
+
+
+@dataclass(frozen=True)
+class OracleCase:
+    """One generated case: ``spark_build(spark)`` returns the engine's
+    DataFrame and ``oracle_sql`` computes the same answer on DuckDB.
+    ``kind`` labels the case in mismatch records; ``ordered`` compares
+    row sequences instead of multisets."""
+
+    kind: str
+    spark_build: Callable
+    oracle_sql: str
+    ordered: bool = False
+
+
+def run_cases(gen, spark, duck, n: int) -> list[dict]:
+    """Draw ``n`` cases from ``gen.case()``, run each on Spark and on
+    DuckDB, and return the mismatch records (empty == clean sweep). An
+    engine error is a mismatch: generators stay inside both engines'
+    contracts, so neither may reject."""
+    mismatches = []
+    for i in range(n):
+        case = gen.case()
+
+        def record(**detail):
+            mismatches.append(
+                {"i": i, "kind": case.kind, **detail, "oracle": case.oracle_sql}
+            )
+
+        try:
+            got = canon_rows(
+                [tuple(r) for r in case.spark_build(spark).collect()], case.ordered
+            )
+        except Exception as e:  # noqa: BLE001 — the error IS the finding
+            record(error=f"spark: {e}")
+            continue
+        try:
+            want = canon_rows(duck.execute(case.oracle_sql).fetchall(), case.ordered)
+        except Exception as e:  # noqa: BLE001
+            record(error=f"duckdb: {e}")
+            continue
+        if got != want:
+            record(
+                spark_rows=len(got), duck_rows=len(want),
+                spark_head=got[:4], duck_head=want[:4],
+            )
+    return mismatches
+
+
+def _literal(v) -> str:
+    return "NULL" if v is None else (f"'{v}'" if isinstance(v, str) else str(v))
+
+
+def _values(rows) -> str:
+    return ", ".join("(" + ", ".join(_literal(v) for v in row) + ")" for row in rows)
+
+
+def values_df(spark, rows, names, ts_cols=frozenset()):
+    """Spark DataFrame over inline rows (a VALUES LocalRelation). Columns
+    in ``ts_cols`` are integer seconds turned into TimestampType; columns
+    holding any string are STRING; the rest are BIGINT."""
+
+    def cast(i, n):
+        if n in ts_cols:
+            return f"timestamp_seconds(CAST({n} AS BIGINT)) AS {n}"
+        if any(isinstance(r[i], str) for r in rows):
+            return f"CAST({n} AS STRING) AS {n}"
+        return f"CAST({n} AS BIGINT) AS {n}"
+
+    sel = ", ".join(cast(i, n) for i, n in enumerate(names))
+    return spark.sql(
+        f"SELECT {sel} FROM (VALUES {_values(rows)}) AS v({', '.join(names)})"
+    )
+
+
+def values_sql(rows, names, str_cols=frozenset()) -> str:
+    """DuckDB inline relation of the same rows: ``str_cols`` VARCHAR,
+    the rest BIGINT (timestamps stay integer seconds)."""
+    casts = ", ".join(
+        f"CAST({n} AS VARCHAR) AS {n}" if n in str_cols else f"CAST({n} AS BIGINT) AS {n}"
+        for n in names
+    )
+    return f"(SELECT {casts} FROM (VALUES {_values(rows)}) AS _v({', '.join(names)}))"

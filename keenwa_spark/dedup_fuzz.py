@@ -18,29 +18,21 @@ What randomized instances add over the documents-table hand oracles:
   guard (the production skew valve) against an oracle that applies the
   same cap via a window count.
 
-Deterministic by seed. Used by tools/dedup_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py dedup (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
+from keenwa_spark.conformance import OracleCase, values_df
 from keenwa_spark.pipeline.hashing import MINHASH_AB, MINHASH_P, duck_hash64
 
 _VOCAB = ["alpha", "bravo", "cat", "dog", "echo", "fox", "gold", "hat"]
 
 _D_NORM = "trim(regexp_replace(lower(txt), '\\s+', ' ', 'g'))"
 _D_WORDS = f"string_split({_D_NORM}, ' ')"
-
-
-def _docs_df(spark, docs: list[tuple[int, str]]):
-    vals = ", ".join(f"({i}, '{t}')" for i, t in docs)
-    return spark.sql(
-        "SELECT CAST(id AS BIGINT) AS id, CAST(txt AS STRING) AS txt "
-        f"FROM (VALUES {vals}) AS v(id, txt)"
-    )
 
 
 def _docs_sql(docs: list[tuple[int, str]]) -> str:
@@ -60,13 +52,6 @@ def _duck_shingles(n: int) -> str:
         f"for i in range(1, len(w) - {n - 2})] "
         "ELSE [] END"
     )
-
-
-@dataclass
-class DedupCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
 
 
 class DedupGen:
@@ -101,27 +86,28 @@ class DedupGen:
             noisy.append((i, t))
         return noisy
 
-    def case(self) -> DedupCase:
+    def case(self) -> OracleCase:
         return self.rng.choice(
             [self._exact, self._jaccard, self._minhash, self._lsh]
         )()
 
-    def _exact(self) -> DedupCase:
+    def _exact(self) -> OracleCase:
         docs = self._corpus()
 
         def spark_build(spark, docs=docs):
             from keenwa_spark.pipeline.dedup import exact_dedup
 
-            return exact_dedup(_docs_df(spark, docs), text_col="txt", id_col="id")
+            df = values_df(spark, docs, ["id", "txt"])
+            return exact_dedup(df, text_col="txt", id_col="id")
 
         oracle = f"""
     SELECT md5({_D_NORM}) AS content_hash, MIN(id) AS id,
            COUNT(*) AS n_copies
     FROM {_docs_sql(docs)} GROUP BY 1
     """
-        return DedupCase("exact", spark_build, oracle)
+        return OracleCase("exact", spark_build, oracle)
 
-    def _jaccard(self) -> DedupCase:
+    def _jaccard(self) -> OracleCase:
         docs = self._corpus()
         n = self.rng.choice([2, 3])
         threshold = self.rng.choice([0.25, 0.5, 0.75])
@@ -130,7 +116,7 @@ class DedupGen:
             from keenwa_spark.pipeline.dedup import ngram_jaccard_pairs
 
             return ngram_jaccard_pairs(
-                _docs_df(spark, docs),
+                values_df(spark, docs, ["id", "txt"]),
                 id_col="id",
                 text_col="txt",
                 n=n,
@@ -158,16 +144,16 @@ class DedupGen:
     WHERE CAST(n_inter AS DOUBLE) / (sa.size + sb.size - n_inter)
           >= {threshold}
     """
-        return DedupCase(f"jaccard_n{n}", spark_build, oracle)
+        return OracleCase(f"jaccard_n{n}", spark_build, oracle)
 
-    def _minhash(self) -> DedupCase:
+    def _minhash(self) -> OracleCase:
         docs = self._corpus()
 
         def spark_build(spark, docs=docs):
             from keenwa_spark.pipeline.dedup import minhash_signatures
 
             return minhash_signatures(
-                _docs_df(spark, docs), id_col="id", text_col="txt", n=3
+                values_df(spark, docs, ["id", "txt"]), id_col="id", text_col="txt", n=3
             )
 
         mins = ", ".join(
@@ -183,9 +169,9 @@ class DedupGen:
     )
     SELECT id, {mins} FROM hashed GROUP BY id
     """
-        return DedupCase("minhash", spark_build, oracle)
+        return OracleCase("minhash", spark_build, oracle)
 
-    def _lsh(self) -> DedupCase:
+    def _lsh(self) -> OracleCase:
         docs = self._corpus()
         bands = self.rng.choice([2, 3, 4, 6])
         max_bucket = self.rng.choice([2, 5, 1000])
@@ -195,7 +181,7 @@ class DedupGen:
             from keenwa_spark.pipeline.dedup import minhash_lsh_pairs
 
             return minhash_lsh_pairs(
-                _docs_df(spark, docs),
+                values_df(spark, docs, ["id", "txt"]),
                 id_col="id",
                 text_col="txt",
                 bands=bands,
@@ -232,47 +218,4 @@ class DedupGen:
     FROM ok_buckets a JOIN ok_buckets b
       ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
     """
-        return DedupCase(f"lsh_b{bands}_cap{max_bucket}", spark_build, oracle)
-
-
-def run_dedup_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = DedupGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase(f"lsh_b{bands}_cap{max_bucket}", spark_build, oracle)

@@ -60,7 +60,7 @@ Dialect confinement rules (each prevents a known cross-engine trap):
   pinned in tests/test_fuzz.py (xfail until fixed upstream); the
   generator avoids the pattern so sweeps gate on everything else.
 
-Deterministic by seed. Used by tools/sql_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py sql (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus in CI).
 """
 
@@ -92,10 +92,25 @@ _SETOPS = [
 
 class QueryGen:
     """One seeded generator; ``query()`` yields a self-contained SQL
-    string runnable verbatim on Spark and DuckDB."""
+    string runnable verbatim on Spark and DuckDB, ``case()`` the same
+    as a ``conformance.OracleCase``."""
 
     def __init__(self, seed: int):
         self.rng = random.Random(seed)
+        self._n = 0  # cases drawn, for the every-8th ordered shape
+
+    def case(self) -> cf.OracleCase:
+        """Every 8th case is an ORDER BY/LIMIT shape compared as a row
+        SEQUENCE (deterministic total order by construction)."""
+        ordered = self._n % 8 == 7
+        self._n += 1
+        sql = self._ordered_select() if ordered else self.query()
+        return cf.OracleCase(
+            "ordered" if ordered else "query",
+            lambda spark: spark.sql(sql),
+            sql,
+            ordered,
+        )
 
     # -- scalar expressions (integer-exact) -----------------------------
     def _col(self, cols: list[str]) -> str:
@@ -487,41 +502,3 @@ class QueryGen:
             p3 = self._pred(cols, 1)
             return f"({two}) {op2} SELECT {sel} FROM {t} WHERE {p3}"
         return two
-
-
-def run_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    """Generate ``n`` queries from ``seed`` and run each on both
-    engines; returns the mismatches (empty == clean sweep). Engine
-    errors count as mismatches (the grammar is confined to the shared
-    dialect, so neither engine may reject)."""
-    gen = QueryGen(seed)
-    mismatches = []
-    for i in range(n):
-        # every ~8th query is an ORDER BY/LIMIT shape compared as a
-        # row SEQUENCE (deterministic total order by construction)
-        ordered = i % 8 == 7
-        sql = gen._ordered_select() if ordered else gen.query()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in spark.sql(sql).collect()], ordered=ordered
-            )
-        except Exception as e:  # noqa: BLE001 — engine error IS the finding
-            mismatches.append({"i": i, "sql": sql, "error": f"spark: {e}"})
-            continue
-        try:
-            want = cf.canon_rows(duck.execute(sql).fetchall(), ordered=ordered)
-        except Exception as e:  # noqa: BLE001
-            mismatches.append({"i": i, "sql": sql, "error": f"duckdb: {e}"})
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "sql": sql,
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:3],
-                    "duck_head": want[:3],
-                }
-            )
-    return mismatches

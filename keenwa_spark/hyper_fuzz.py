@@ -17,23 +17,15 @@ of two EXACT sub-2^53 integers computed identically on both engines
 (twa, share) — no float-fold-order hazard anywhere. Timestamps travel
 as integer seconds in, epoch BIGINT out.
 
-Deterministic by seed. Used by tools/hyper_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py hyper (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-from keenwa_spark.state_fuzz import _values_df, _values_sql
-
-
-@dataclass
-class HyperCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
+from keenwa_spark.conformance import OracleCase, values_df, values_sql
 
 
 class HyperGen:
@@ -57,12 +49,12 @@ class HyperGen:
             rows.append((i, self.rng.randint(0, 2), ts, v))
         return rows
 
-    def case(self) -> HyperCase:
+    def case(self) -> OracleCase:
         return self.rng.choice(
             [self._twa, self._states, self._counter, self._ohlc]
         )()
 
-    def _twa(self) -> HyperCase:
+    def _twa(self) -> OracleCase:
         rows = self._rows()
         names = ["uid", "k0", "ts", "v"]
         method = self.rng.choice(["locf", "linear"])
@@ -70,7 +62,7 @@ class HyperGen:
         def spark_build(spark, rows=rows, method=method):
             from keenwa_spark.operators.hyperfunctions import time_weighted_avg
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             return time_weighted_avg(
                 df, keys=["k0"], ts_col="ts", value_col="v",
                 method=method, tie_cols=["uid"],
@@ -82,7 +74,7 @@ class HyperGen:
             num, den = "(CAST(v AS HUGEINT) + nv) * dt", "2 * SUM(dt)"
         oracle = (
             "WITH s AS (SELECT k0, ts, v, uid FROM "
-            f"{_values_sql(rows, names)} "
+            f"{values_sql(rows, names)} "
             "WHERE v IS NOT NULL AND ts IS NOT NULL), "
             "g AS (SELECT k0, v, "
             "LEAD(v) OVER (PARTITION BY k0 ORDER BY ts, uid) AS nv, "
@@ -92,9 +84,9 @@ class HyperGen:
             "AS twa, CAST(COALESCE(SUM(dt), 0) AS BIGINT) AS duration_us, "
             "CAST(COUNT(*) AS BIGINT) AS n_obs FROM g GROUP BY k0"
         )
-        return HyperCase(f"twa_{method}", spark_build, oracle)
+        return OracleCase(f"twa_{method}", spark_build, oracle)
 
-    def _states(self) -> HyperCase:
+    def _states(self) -> OracleCase:
         rows = [r for r in self._rows(n_states=3) if r[2] is not None]
         rows = rows or [(0, 0, 0, "s0"), (1, 0, 5, "s1")]
         names = ["uid", "k0", "ts", "state"]
@@ -102,7 +94,7 @@ class HyperGen:
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.hyperfunctions import state_durations
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             return state_durations(
                 df, keys=["k0"], ts_col="ts", state_col="state",
                 tie_cols=["uid"],
@@ -111,7 +103,7 @@ class HyperGen:
         oracle = (
             "WITH g AS (SELECT k0, state, "
             "(LEAD(ts) OVER (PARTITION BY k0 ORDER BY ts, uid) - ts) "
-            f"* 1000000 AS dt FROM {_values_sql(rows, names, str_cols={'state'})}), "
+            f"* 1000000 AS dt FROM {values_sql(rows, names, str_cols={'state'})}), "
             "p AS (SELECT k0, state, CAST(SUM(dt) AS BIGINT) AS duration_us, "
             "CAST(COUNT(*) AS BIGINT) AS n_intervals FROM g "
             "WHERE dt IS NOT NULL GROUP BY k0, state) "
@@ -119,23 +111,23 @@ class HyperGen:
             "CAST(duration_us AS DOUBLE) / CAST(SUM(duration_us) OVER "
             "(PARTITION BY k0) AS DOUBLE) AS share FROM p"
         )
-        return HyperCase("state_durations", spark_build, oracle)
+        return OracleCase("state_durations", spark_build, oracle)
 
-    def _counter(self) -> HyperCase:
+    def _counter(self) -> OracleCase:
         rows = self._rows()
         names = ["uid", "k0", "ts", "v"]
 
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.hyperfunctions import counter_delta
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             return counter_delta(
                 df, keys=["k0"], ts_col="ts", value_col="v", tie_cols=["uid"]
             ).select("k0", "counter_increase", "n_resets", "n_obs")
 
         oracle = (
             "WITH s AS (SELECT k0, ts, v, uid FROM "
-            f"{_values_sql(rows, names)} "
+            f"{values_sql(rows, names)} "
             "WHERE v IS NOT NULL AND ts IS NOT NULL), "
             "d AS (SELECT k0, CASE WHEN prev IS NULL THEN NULL "
             "WHEN v >= prev THEN v - prev ELSE v END AS d, "
@@ -146,9 +138,9 @@ class HyperGen:
             "counter_increase, CAST(SUM(r) AS BIGINT) AS n_resets, "
             "CAST(COUNT(*) AS BIGINT) AS n_obs FROM d GROUP BY k0"
         )
-        return HyperCase("counter_delta", spark_build, oracle)
+        return OracleCase("counter_delta", spark_build, oracle)
 
-    def _ohlc(self) -> HyperCase:
+    def _ohlc(self) -> OracleCase:
         rows = self._rows()
         names = ["uid", "k0", "ts", "v"]
 
@@ -157,7 +149,7 @@ class HyperGen:
 
             from keenwa_spark.operators.hyperfunctions import ohlc_bars
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             out = ohlc_bars(
                 df, keys=["k0"], ts_col="ts", value_col="v",
                 grain="minute", tie_cols=["uid"],
@@ -171,7 +163,7 @@ class HyperGen:
 
         oracle = (
             "WITH b AS (SELECT k0, (ts // 60) * 60 AS bkt, ts, uid, v FROM "
-            f"{_values_sql(rows, names)} "
+            f"{values_sql(rows, names)} "
             "WHERE v IS NOT NULL AND ts IS NOT NULL), "
             "w AS (SELECT *, FIRST_VALUE(v) OVER (PARTITION BY k0, bkt "
             "ORDER BY ts, uid) AS o, FIRST_VALUE(v) OVER (PARTITION BY "
@@ -181,47 +173,4 @@ class HyperGen:
             "CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v) AS BIGINT) AS "
             "volume FROM w GROUP BY k0, bkt"
         )
-        return HyperCase("ohlc", spark_build, oracle)
-
-
-def run_hyper_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = HyperGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase("ohlc", spark_build, oracle)

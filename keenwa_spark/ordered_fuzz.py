@@ -15,46 +15,22 @@ tie-break, run through the operator on Spark and through the plain
 ``OVER (ORDER BY ...)`` window on DuckDB (total order by construction,
 so ROWS frames are deterministic); id-keyed multiset compare.
 
-Deterministic by seed. Used by tools/ordered_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py ordered (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-
-@dataclass
-class OrderedCase:
-    kind: str  # row_number | cumsum | prev_min
-    spark_build: "object"
-    oracle_sql: str
-
-
-def _values_df(spark, rows, names):
-    vals = ", ".join(
-        "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
-        for row in rows
-    )
-    sel = ", ".join(f"CAST({n} AS BIGINT) AS {n}" for n in names)
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS v({', '.join(names)})")
-
-
-def _values_sql(rows, names) -> str:
-    vals = ", ".join(
-        "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
-        for row in rows
-    )
-    casts = ", ".join(f"CAST({n} AS BIGINT) AS {n}" for n in names)
-    return f"(SELECT {casts} FROM (VALUES {vals}) AS _v({', '.join(names)}))"
+from keenwa_spark.conformance import OracleCase, values_df, values_sql
 
 
 class OrderedGen:
     def __init__(self, seed: int):
         self.rng = random.Random(seed)
 
-    def case(self) -> OrderedCase:
+    def case(self) -> OracleCase:
         n = self.rng.randint(5, 250)
         # tie density: domain size 1 is the mega-tie worst case (every
         # quantile cut collapses), 3 is heavy ties, 10^3 is near-unique
@@ -80,7 +56,7 @@ class OrderedGen:
         # tie-break columns stay ASC
         d = "DESC" if descending else "ASC"
         order = f"v {d}, id ASC"
-        src = _values_sql(rows, names)
+        src = values_sql(rows, names)
 
         if kind == "row_number":
 
@@ -90,7 +66,7 @@ class OrderedGen:
             ):
                 from keenwa_spark.operators.ordered import with_global_row_number
 
-                df = _values_df(spark, rows, names)
+                df = values_df(spark, rows, names)
                 return with_global_row_number(
                     df, order_by=["v", "id"], bucket_col="v", out_col="o",
                     descending=descending, n_buckets=n_buckets,
@@ -109,7 +85,7 @@ class OrderedGen:
             ):
                 from keenwa_spark.operators.ordered import with_global_cumsum
 
-                df = _values_df(spark, rows, names)
+                df = values_df(spark, rows, names)
                 return with_global_cumsum(
                     df, order_by=["v", "id"], bucket_col="v",
                     sums={"o": "w"}, descending=descending,
@@ -129,7 +105,7 @@ class OrderedGen:
             ):
                 from keenwa_spark.operators.ordered import with_global_prev_min
 
-                df = _values_df(spark, rows, names)
+                df = values_df(spark, rows, names)
                 return with_global_prev_min(
                     df, order_by=["v", "id"], bucket_col="v", min_of="w",
                     out_col="o", descending=descending,
@@ -141,47 +117,4 @@ class OrderedGen:
                 f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) "
                 f"AS BIGINT) AS o FROM {src}"
             )
-        return OrderedCase(kind, spark_build, oracle)
-
-
-def run_ordered_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = OrderedGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:300],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:300],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:300],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase(kind, spark_build, oracle)

@@ -149,7 +149,7 @@ def dedup_groups(
     — bounded by the candidate set, orders of magnitude smaller than
     the corpus — so it is broadcast (r14): the checkpointed-RDD label
     frame carries no stats and AQE otherwise leaves a corpus-sized
-    SortMergeJoin in place (probe: tools/r14_curation_bcast_probe.py)."""
+    SortMergeJoin in place (pinned: tests/test_plan_shape.py census)."""
     comp = connected_components(pairs)
     return (
         docs.select(F.col(id_col))

@@ -951,8 +951,8 @@ def pl_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded by the LSH candidate set — the same tiny-by-construction
     # argument lsh_verified_pairs broadcasts its candidate ids on —
     # and the checkpointed-RDD side carries no stats, so AQE never
-    # converts the SortMergeJoin on its own (executed-plan probe:
-    # tools/r14_curation_bcast_probe.py, SMJ 1 -> 0, Exchange 2 -> 1).
+    # converts the SortMergeJoin on its own (executed-plan census pin in
+    # tests/test_plan_shape.py: SMJ 1 -> 0, Exchange 2 -> 1).
     # Without the hint the CORPUS-sized stats frame pays the join's
     # exchange + sort.
     stats = text_stats(docs).select("doc_id", "n_words")

@@ -18,35 +18,27 @@ bucket value but still stretch the grid extent), equal-ts ties broken
 by the unique id, leading/trailing gaps (NULL under interpolation,
 forward-filled under LOCF), and single-observation keys.
 
-Deterministic by seed. Used by tools/series_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py series (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-from keenwa_spark.state_fuzz import _values_df, _values_sql
-
-
-@dataclass
-class SeriesCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
+from keenwa_spark.conformance import OracleCase, values_df, values_sql
 
 
 class SeriesGen:
     def __init__(self, seed: int):
         self.rng = random.Random(seed)
 
-    def case(self) -> SeriesCase:
+    def case(self) -> OracleCase:
         return self.rng.choice(
             [self._skyline, self._resample, self._interp, self._seqpat]
         )()
 
-    def _seqpat(self) -> SeriesCase:
+    def _seqpat(self) -> OracleCase:
         """sequence_pattern_count (operators/sequence.py): per-key
         encoded event string + non-overlapping regex count, vs a
         DuckDB ordered string_agg + regexp_extract_all oracle. Events
@@ -69,9 +61,8 @@ class SeriesGen:
 
         def spark_build(spark, rows=rows, pattern=pattern):
             from keenwa_spark.operators.sequence import sequence_pattern_count
-            from keenwa_spark.state_fuzz import _values_df
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             return sequence_pattern_count(
                 df, keys=["k0"], ts_col="ts", event_col="ev",
                 mapping=mapping, pattern=pattern, tie_cols=["uid"],
@@ -86,12 +77,12 @@ class SeriesGen:
             f"CAST(LEN(regexp_extract_all(seq, '{pattern}')) AS BIGINT) "
             "AS n_matches FROM ("
             f"SELECT k0, STRING_AGG({enc}, '' ORDER BY ts, uid) AS seq "
-            f"FROM {_values_sql(rows, names, str_cols={'ev'})} "
+            f"FROM {values_sql(rows, names, str_cols={'ev'})} "
             "GROUP BY k0)"
         )
-        return SeriesCase("seqpat", spark_build, oracle)
+        return OracleCase("seqpat", spark_build, oracle)
 
-    def _skyline(self) -> SeriesCase:
+    def _skyline(self) -> OracleCase:
         n = self.rng.randint(3, 60)
         domain = self.rng.choice([4, 10, 40])
         rows = [
@@ -107,18 +98,18 @@ class SeriesGen:
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.skyline import skyline_2d
 
-            df = _values_df(spark, rows, names)
+            df = values_df(spark, rows, names)
             return skyline_2d(df, maximize_col="mx", minimize_col="mn")
 
         oracle = (
             "WITH p AS (SELECT DISTINCT mx, mn FROM "
-            f"{_values_sql(rows, names)} "
+            f"{values_sql(rows, names)} "
             "WHERE mx IS NOT NULL AND mn IS NOT NULL) "
             "SELECT mx, mn FROM p a WHERE NOT EXISTS ("
             "SELECT 1 FROM p b WHERE b.mx >= a.mx AND b.mn <= a.mn "
             "AND (b.mx > a.mx OR b.mn < a.mn))"
         )
-        return SeriesCase("skyline", spark_build, oracle)
+        return OracleCase("skyline", spark_build, oracle)
 
     def _series_rows(self):
         n = self.rng.randint(2, 40)
@@ -136,7 +127,7 @@ class SeriesGen:
             seen.add((k, ts))
         return rows
 
-    def _resample_common(self, interpolate: bool) -> SeriesCase:
+    def _resample_common(self, interpolate: bool) -> OracleCase:
         rows = self._series_rows()
         names = ["id", "k0", "ts", "v"]
         step = self.rng.choice([1, 5, 30, 60])
@@ -149,7 +140,7 @@ class SeriesGen:
                 time_resample_interpolate,
             )
 
-            df = _values_df(spark, rows, names, ts_cols={"ts"})
+            df = values_df(spark, rows, names, ts_cols={"ts"})
             fn = time_resample_interpolate if interpolate else time_resample
             out = fn(
                 df, key_col="k0", ts_col="ts", value_col="v",
@@ -171,7 +162,7 @@ class SeriesGen:
         # value-bearing rows
         base = (
             f"ab AS (SELECT k0, (ts // {step}) * {step} AS b, ts, id, "
-            f"CAST(v AS DOUBLE) AS v FROM {_values_sql(rows, names)}), "
+            f"CAST(v AS DOUBLE) AS v FROM {values_sql(rows, names)}), "
             "pb AS (SELECT DISTINCT k0, b, FIRST_VALUE(v) OVER "
             "(PARTITION BY k0, b ORDER BY ts DESC, id DESC) AS lv, "
             "CAST(COUNT(*) OVER (PARTITION BY k0, b) AS BIGINT) AS n_obs "
@@ -191,7 +182,7 @@ class SeriesGen:
                 "ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT "
                 "ROW) AS value, n_obs FROM j"
             )
-            return SeriesCase("resample_locf", spark_build, oracle)
+            return OracleCase("resample_locf", spark_build, oracle)
         # interpolation anchors: prev/next OBSERVED bucket value and
         # position; the value expression mirrors the engine's exact
         # fixed-order double arithmetic (p + (n - p) * (dx / dw)) over
@@ -218,53 +209,10 @@ class SeriesGen:
             "WHEN pv IS NOT NULL AND nv IS NOT NULL THEN 'interp' "
             "ELSE 'edge' END AS src FROM a"
         )
-        return SeriesCase("resample_interp", spark_build, oracle)
+        return OracleCase("resample_interp", spark_build, oracle)
 
-    def _resample(self) -> SeriesCase:
+    def _resample(self) -> OracleCase:
         return self._resample_common(interpolate=False)
 
-    def _interp(self) -> SeriesCase:
+    def _interp(self) -> OracleCase:
         return self._resample_common(interpolate=True)
-
-
-def run_series_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = SeriesGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches

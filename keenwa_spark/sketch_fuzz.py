@@ -14,15 +14,15 @@ tiny filters (near-100% FP), empty key sets, colliding short keys,
 heavy multiplicities, and both physical probe shapes (dense-array
 projection vs broadcast word join) against one oracle.
 
-Deterministic by seed. Used by tools/sketch_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py sketch (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
+from keenwa_spark.conformance import OracleCase, values_df
 from keenwa_spark.pipeline.bloom import WORD_BITS, _position_exprs
 from keenwa_spark.pipeline.sketches import _cms_pos
 
@@ -32,21 +32,7 @@ def _strs_values_sql(items: list[str], col: str) -> str:
     return f"(SELECT CAST({col} AS VARCHAR) AS {col} FROM (VALUES {vals}) AS v({col}))"
 
 
-def _strs_df(spark, items: list[str], col: str):
-    vals = ", ".join(f"('{s}')" for s in items)
-    return spark.sql(
-        f"SELECT CAST({col} AS STRING) AS {col} FROM (VALUES {vals}) AS v({col})"
-    )
-
-
 _DUCK_H = "('0x' || substr(md5({c}), 1, 8))::BIGINT"
-
-
-@dataclass
-class SketchCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
 
 
 class SketchGen:
@@ -67,10 +53,10 @@ class SketchGen:
         }
         return sorted(out)
 
-    def case(self) -> SketchCase:
+    def case(self) -> OracleCase:
         return self.rng.choice([self._bloom, self._cms])()
 
-    def _bloom(self) -> SketchCase:
+    def _bloom(self) -> OracleCase:
         keys = self._keys(0, 60)
         probes = self._keys(1, 80)
         m_bits = self.rng.choice([256, 512, 1024, 2048])
@@ -91,7 +77,7 @@ class SketchGen:
             from keenwa_spark.pipeline.hashing import spark_hash64
 
             def hashed(items):
-                return _strs_df(spark, items, "s").select(
+                return values_df(spark, [(x,) for x in items], ["s"]).select(
                     "s", F.expr(spark_hash64("s")).alias("h")
                 )
 
@@ -138,9 +124,9 @@ class SketchGen:
     GROUP BY s
     """
         shape = "dense" if dense else "join"
-        return SketchCase(f"bloom_{shape}", spark_build, oracle)
+        return OracleCase(f"bloom_{shape}", spark_build, oracle)
 
-    def _cms(self) -> SketchCase:
+    def _cms(self) -> OracleCase:
         # a stream with multiplicities (skew: some tokens repeat a lot)
         toks = self._keys(1, 25)
         stream: list[str] = []
@@ -156,11 +142,11 @@ class SketchGen:
             from keenwa_spark.pipeline.hashing import spark_hash64
             from keenwa_spark.pipeline.sketches import cms_build, cms_estimate
 
-            hs = _strs_df(spark, stream, "s").select(
+            hs = values_df(spark, [(x,) for x in stream], ["s"]).select(
                 F.expr(spark_hash64("s")).alias("h")
             )
             sketch = cms_build(hs, "h", d=d, w=w)
-            items = _strs_df(spark, toks, "s").select(
+            items = values_df(spark, [(x,) for x in toks], ["s"]).select(
                 "s", F.expr(spark_hash64("s")).alias("h")
             )
             return cms_estimate(items, sketch, "h", key_cols=("s",), d=d, w=w)
@@ -189,47 +175,4 @@ class SketchGen:
     FROM qarms q LEFT JOIN cms c USING (j, pos)
     GROUP BY s
     """
-        return SketchCase(f"cms_d{d}", spark_build, oracle)
-
-
-def run_sketch_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = SketchGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase(f"cms_d{d}", spark_build, oracle)

@@ -14,24 +14,16 @@ distributions, and random salts (split independence comes from the
 salt — the same population must split DIFFERENTLY under different
 salts, which the generator exercises by construction).
 
-Deterministic by seed. Used by tools/split_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py split (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
+from keenwa_spark.conformance import OracleCase, values_df
 from keenwa_spark.pipeline.sampling import _BUCKETS, _split_edges
-
-
-def _pop_df(spark, rows):
-    vals = ", ".join(f"({i}, '{lab}')" for i, lab in rows)
-    return spark.sql(
-        "SELECT CAST(id AS BIGINT) AS id, CAST(lab AS STRING) AS lab "
-        f"FROM (VALUES {vals}) AS v(id, lab)"
-    )
 
 
 def _pop_sql(rows) -> str:
@@ -47,13 +39,6 @@ def _duck_bucket(key: str, salt: str) -> str:
         f"(('0x' || substr(md5(CAST({key} AS VARCHAR) || '{salt}'), 1, 8))"
         f"::BIGINT) % {_BUCKETS}"
     )
-
-
-@dataclass
-class SplitCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
 
 
 class SplitGen:
@@ -76,12 +61,12 @@ class SplitGen:
     def _salt(self):
         return f"s{self.rng.randint(0, 99)}"
 
-    def case(self) -> SplitCase:
+    def case(self) -> OracleCase:
         return self.rng.choice(
             [self._hash_split, self._strat_split, self._strat_sample]
         )()
 
-    def _hash_split(self) -> SplitCase:
+    def _hash_split(self) -> OracleCase:
         rows = self._population()
         salt = self._salt()
         n_arms = self.rng.randint(1, 3)
@@ -93,7 +78,8 @@ class SplitGen:
         def spark_build(spark, rows=rows, splits=splits, salt=salt):
             from keenwa_spark.pipeline.sampling import hash_split
 
-            return hash_split(_pop_df(spark, rows), "id", splits, salt=salt)
+            df = values_df(spark, rows, ["id", "lab"])
+            return hash_split(df, "id", splits, salt=salt)
 
         edges = _split_edges(splits)
         case = " ".join(
@@ -107,9 +93,9 @@ class SplitGen:
     SELECT id, lab, CASE {case} END AS split
     FROM b WHERE (CASE {case} END) IS NOT NULL
     """
-        return SplitCase(f"hash_{len(splits)}arm", spark_build, oracle)
+        return OracleCase(f"hash_{len(splits)}arm", spark_build, oracle)
 
-    def _strat_split(self) -> SplitCase:
+    def _strat_split(self) -> OracleCase:
         rows = self._population()
         salt = self._salt()
         n_arms = self.rng.randint(1, 3)
@@ -126,7 +112,7 @@ class SplitGen:
             from keenwa_spark.pipeline.sampling import stratified_split
 
             return stratified_split(
-                _pop_df(spark, rows), "lab", splits, "id", salt=salt
+                values_df(spark, rows, ["id", "lab"]), "lab", splits, "id", salt=salt
             )
 
         cum, arms = 0, []
@@ -145,9 +131,9 @@ class SplitGen:
     )
     SELECT id, lab, {case} AS split FROM r WHERE ({case}) IS NOT NULL
     """
-        return SplitCase(f"strat_{len(splits)}arm", spark_build, oracle)
+        return OracleCase(f"strat_{len(splits)}arm", spark_build, oracle)
 
-    def _strat_sample(self) -> SplitCase:
+    def _strat_sample(self) -> OracleCase:
         rows = self._population()
         salt = self._salt()
         n_per = self.rng.choice([1, 2, 5])
@@ -156,7 +142,7 @@ class SplitGen:
             from keenwa_spark.pipeline.sampling import stratified_sample
 
             return stratified_sample(
-                _pop_df(spark, rows), "lab", n_per, "id", salt=salt
+                values_df(spark, rows, ["id", "lab"]), "lab", n_per, "id", salt=salt
             )
 
         oracle = f"""
@@ -169,47 +155,4 @@ class SplitGen:
     )
     SELECT id, lab FROM r WHERE rk <= {n_per}
     """
-        return SplitCase(f"sample_n{n_per}", spark_build, oracle)
-
-
-def run_split_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = SplitGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase(f"sample_n{n_per}", spark_build, oracle)

@@ -18,61 +18,15 @@ Oracle conventions:
 - timestamps travel as integer seconds end to end (timestamp_seconds
   in, unix_seconds out) — no tz/precision trap in the compare.
 
-Deterministic by seed. Used by tools/state_fuzz.py (wide sweeps) and
+Deterministic by seed. Used by tools/fuzz.py state (wide sweeps) and
 tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-
-@dataclass
-class StateCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
-
-
-def _values_df(spark, rows, names, ts_cols=frozenset()):
-    vals = ", ".join(
-        "("
-        + ", ".join(
-            "NULL" if v is None else (f"'{v}'" if isinstance(v, str) else str(v))
-            for v in row
-        )
-        + ")"
-        for row in rows
-    )
-    sel = ", ".join(
-        f"timestamp_seconds(CAST({n} AS BIGINT)) AS {n}"
-        if n in ts_cols
-        else (
-            f"CAST({n} AS STRING) AS {n}"
-            if any(isinstance(r[i], str) for r in rows for i in [names.index(n)])
-            else f"CAST({n} AS BIGINT) AS {n}"
-        )
-        for n in names
-    )
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS v({', '.join(names)})")
-
-
-def _values_sql(rows, names, str_cols=frozenset()) -> str:
-    vals = ", ".join(
-        "("
-        + ", ".join(
-            "NULL" if v is None else (f"'{v}'" if isinstance(v, str) else str(v))
-            for v in row
-        )
-        + ")"
-        for row in rows
-    )
-    casts = ", ".join(
-        f"CAST({n} AS VARCHAR) AS {n}" if n in str_cols else f"CAST({n} AS BIGINT) AS {n}"
-        for n in names
-    )
-    return f"(SELECT {casts} FROM (VALUES {vals}) AS _v({', '.join(names)}))"
+from keenwa_spark.conformance import OracleCase, values_df, values_sql
 
 
 class StateGen:
@@ -85,7 +39,7 @@ class StateGen:
     def _val(self, null_p: float = 0.2):
         return None if self.rng.random() < null_p else self.rng.randint(-30, 30)
 
-    def case(self) -> StateCase:
+    def case(self) -> OracleCase:
         return self.rng.choice(
             [
                 self._snapshot_diff,
@@ -98,7 +52,7 @@ class StateGen:
         )()
 
     # -- snapshot_diff ------------------------------------------------------
-    def _snapshot_diff(self) -> StateCase:
+    def _snapshot_diff(self) -> OracleCase:
         n_keys = self.rng.randint(1, 2)
         keys = [f"k{i}" for i in range(n_keys)]
         vals = ["v0", "v1"]
@@ -132,8 +86,8 @@ class StateGen:
         ):
             from keenwa_spark.operators.cdc import snapshot_diff
 
-            old = _values_df(spark, orows, names)
-            new = _values_df(spark, nrows, names)
+            old = values_df(spark, orows, names)
+            new = values_df(spark, nrows, names)
             out = snapshot_diff(
                 old, new, keys=keys, include_unchanged=include_unch,
                 null_safe_keys=null_safe,
@@ -158,14 +112,14 @@ class StateGen:
             + ", ".join(f"o.{c} AS old_{c}" for c in vals)
             + ", "
             + ", ".join(f"n.{c} AS new_{c}" for c in vals)
-            + f" FROM (SELECT *, TRUE AS __in FROM {_values_sql(orows, names)}) o"
-            f" FULL JOIN (SELECT *, TRUE AS __in FROM {_values_sql(nrows, names)}) n"
+            + f" FROM (SELECT *, TRUE AS __in FROM {values_sql(orows, names)}) o"
+            f" FULL JOIN (SELECT *, TRUE AS __in FROM {values_sql(nrows, names)}) n"
             f" ON {on}{filt}"
         )
-        return StateCase("snapshot_diff", spark_build, oracle)
+        return OracleCase("snapshot_diff", spark_build, oracle)
 
     # -- merge_upsert ---------------------------------------------------------
-    def _merge_upsert(self) -> StateCase:
+    def _merge_upsert(self) -> OracleCase:
         keys = ["k0"]
         vals = ["v0", "v1"]
         null_safe = self.rng.random() < 0.5
@@ -192,8 +146,8 @@ class StateGen:
         ):
             from keenwa_spark.operators.cdc import merge_upsert
 
-            base = _values_df(spark, brows, names)
-            delta = _values_df(spark, drows, names)
+            base = values_df(spark, brows, names)
+            delta = values_df(spark, drows, names)
             return merge_upsert(
                 base, delta, keys=keys, combine=modes,
                 null_safe_keys=null_safe,
@@ -225,14 +179,14 @@ class StateGen:
             exprs.append(f"CAST({e} AS BIGINT) AS {c}")
         oracle = (
             f"SELECT COALESCE(b.k0, d.k0) AS k0, {', '.join(exprs)} "
-            f"FROM {_values_sql(brows, names)} b "
-            f"FULL JOIN (SELECT *, TRUE AS __in FROM {_values_sql(drows, names)}) d "
+            f"FROM {values_sql(brows, names)} b "
+            f"FULL JOIN (SELECT *, TRUE AS __in FROM {values_sql(drows, names)}) d "
             f"ON b.k0 {eq} d.k0"
         )
-        return StateCase("merge_upsert", spark_build, oracle)
+        return OracleCase("merge_upsert", spark_build, oracle)
 
     # -- changelog_compact ----------------------------------------------------
-    def _changelog(self) -> StateCase:
+    def _changelog(self) -> OracleCase:
         n = self.rng.randint(3, 30)
         rows = [
             (
@@ -249,7 +203,7 @@ class StateGen:
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.cdc import changelog_compact
 
-            df = _values_df(spark, rows, names)
+            df = values_df(spark, rows, names)
             return changelog_compact(
                 df, keys=["k0"], ts_col="ts", op_col="op", tie_cols=["uid"]
             ).select(*names)
@@ -258,13 +212,13 @@ class StateGen:
             f"SELECT uid, k0, ts, op, v FROM ("
             f"SELECT *, ROW_NUMBER() OVER (PARTITION BY k0 "
             f"ORDER BY ts DESC NULLS LAST, uid DESC NULLS LAST) AS rn "
-            f"FROM {_values_sql(rows, names, str_cols={'op'})}) "
+            f"FROM {values_sql(rows, names, str_cols={'op'})}) "
             f"WHERE rn = 1 AND op IS DISTINCT FROM 'delete'"
         )
-        return StateCase("changelog", spark_build, oracle)
+        return OracleCase("changelog", spark_build, oracle)
 
     # -- gaps_islands ------------------------------------------------------
-    def _islands(self) -> StateCase:
+    def _islands(self) -> OracleCase:
         pairs = {
             (self.rng.randint(0, 3), self.rng.randint(0, 40))
             for _ in range(self.rng.randint(3, 60))
@@ -275,7 +229,7 @@ class StateGen:
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.islands import gaps_islands
 
-            df = _values_df(spark, rows, names)
+            df = values_df(spark, rows, names)
             return gaps_islands(df, keys=["k0"], seq_col="seq").select(
                 "k0", "island_start", "island_end", "island_len"
             )
@@ -285,13 +239,13 @@ class StateGen:
             f"CAST(MAX(seq) AS BIGINT) AS island_end, "
             f"CAST(COUNT(*) AS BIGINT) AS island_len FROM ("
             f"SELECT k0, seq, seq - ROW_NUMBER() OVER (PARTITION BY k0 "
-            f"ORDER BY seq) AS g FROM {_values_sql(rows, names)}) "
+            f"ORDER BY seq) AS g FROM {values_sql(rows, names)}) "
             f"GROUP BY k0, g"
         )
-        return StateCase("islands", spark_build, oracle)
+        return OracleCase("islands", spark_build, oracle)
 
     # -- scd2_compress ------------------------------------------------------
-    def _scd2(self) -> StateCase:
+    def _scd2(self) -> OracleCase:
         seen, rows = set(), []
         for _ in range(self.rng.randint(3, 50)):
             k, ts = self.rng.randint(0, 2), self.rng.randint(0, 30)
@@ -305,7 +259,7 @@ class StateGen:
         def spark_build(spark, rows=rows):
             from keenwa_spark.operators.islands import scd2_compress
 
-            df = _values_df(spark, rows, names)
+            df = values_df(spark, rows, names)
             return scd2_compress(
                 df, keys=["k0"], ts_col="ts", attr_cols=["a0", "a1"]
             ).select("k0", "a0", "a1", "valid_from", "valid_to", "n_obs")
@@ -315,7 +269,7 @@ class StateGen:
             "ROW_NUMBER() OVER w = 1 OR NOT (a0 IS NOT DISTINCT FROM "
             "LAG(a0) OVER w AND a1 IS NOT DISTINCT FROM LAG(a1) OVER w) "
             "THEN 1 ELSE 0 END AS f FROM "
-            f"{_values_sql(rows, names)} "
+            f"{values_sql(rows, names)} "
             "WINDOW w AS (PARTITION BY k0 ORDER BY ts)), "
             "runs AS (SELECT *, SUM(f) OVER (PARTITION BY k0 ORDER BY ts "
             "ROWS UNBOUNDED PRECEDING) AS run FROM flagged), "
@@ -325,10 +279,10 @@ class StateGen:
             "SELECT k0, a0, a1, valid_from, LEAD(valid_from) OVER "
             "(PARTITION BY k0 ORDER BY valid_from) AS valid_to, n_obs FROM per"
         )
-        return StateCase("scd2", spark_build, oracle)
+        return OracleCase("scd2", spark_build, oracle)
 
     # -- interval_coalesce ---------------------------------------------------
-    def _coalesce(self) -> StateCase:
+    def _coalesce(self) -> OracleCase:
         rows = []
         for _ in range(self.rng.randint(2, 40)):
             lo = self.rng.randint(0, 60)
@@ -341,7 +295,7 @@ class StateGen:
 
             from keenwa_spark.operators.islands import interval_coalesce
 
-            df = _values_df(spark, rows, names, ts_cols={"s", "e"})
+            df = values_df(spark, rows, names, ts_cols={"s", "e"})
             out = interval_coalesce(df, keys=["k0"], start_col="s", end_col="e")
             return out.select(
                 "k0",
@@ -353,7 +307,7 @@ class StateGen:
         oracle = (
             "WITH o AS (SELECT k0, s, e, MAX(e) OVER (PARTITION BY k0 "
             "ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 "
-            f"PRECEDING) AS pme FROM {_values_sql(rows, names)}), "
+            f"PRECEDING) AS pme FROM {values_sql(rows, names)}), "
             "g AS (SELECT *, SUM(CASE WHEN pme IS NULL OR s > pme THEN 1 "
             "ELSE 0 END) OVER (PARTITION BY k0 ORDER BY s, e ROWS "
             "UNBOUNDED PRECEDING) AS grp FROM o) "
@@ -361,47 +315,4 @@ class StateGen:
             "CAST(MAX(e) AS BIGINT) AS me, "
             "CAST(COUNT(*) AS BIGINT) AS n_intervals FROM g GROUP BY k0, grp"
         )
-        return StateCase("coalesce", spark_build, oracle)
-
-
-def run_state_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = StateGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase("coalesce", spark_build, oracle)

@@ -87,7 +87,7 @@ or timezone compare traps. In the late family, event times are drawn
 with ``ts % w != delay % w`` so no realizable watermark (always some
 ``ts - delay``) ever equals a window boundary (always a multiple of
 ``w``) — no boundary-tie ambiguity at Spark's eviction-at-equality
-edge (ADVICE r11). Deterministic by seed. Used by tools/stream_fuzz.py (wide
+edge (ADVICE r11). Deterministic by seed. Used by tools/fuzz.py stream (wide
 sweeps) and tests/test_fuzz.py (pinned-seed corpus).
 """
 

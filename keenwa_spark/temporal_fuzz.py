@@ -28,48 +28,15 @@ payload — is deliberately NOT exercised here; it is pinned by hand
 tests as an arbitrary-but-deterministic contract DuckDB does not
 share).
 
-Deterministic by seed. Used by tools/temporal_fuzz.py (wide sweeps)
+Deterministic by seed. Used by tools/fuzz.py temporal (wide sweeps)
 and tests/test_fuzz.py (pinned-seed corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-
-@dataclass
-class TemporalCase:
-    kind: str  # asof | range | overlap
-    spark_build: "object"  # Callable[[SparkSession], DataFrame]
-    oracle_sql: str
-    ordered: bool = False
-
-
-def _values_df(spark, rows, names, ts_cols):
-    """Spark DataFrame from inline rows (VALUES LocalRelation); columns
-    in ``ts_cols`` are integer seconds converted to TimestampType."""
-    vals = ", ".join(
-        "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
-        for row in rows
-    )
-    sel = ", ".join(
-        f"timestamp_seconds(CAST({n} AS BIGINT)) AS {n}"
-        if n in ts_cols
-        else f"CAST({n} AS BIGINT) AS {n}"
-        for n in names
-    )
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS v({', '.join(names)})")
-
-
-def _values_sql(rows, names) -> str:
-    """DuckDB inline relation of the same rows, all plain BIGINT."""
-    vals = ", ".join(
-        "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
-        for row in rows
-    )
-    casts = ", ".join(f"CAST({n} AS BIGINT) AS {n}" for n in names)
-    return f"(SELECT {casts} FROM (VALUES {vals}) AS _v({', '.join(names)}))"
+from keenwa_spark.conformance import OracleCase, values_df, values_sql
 
 
 class TemporalGen:
@@ -82,7 +49,7 @@ class TemporalGen:
     def _ts(self) -> int:
         return self.rng.randint(0, 500)
 
-    def case(self) -> TemporalCase:
+    def case(self) -> OracleCase:
         r = self.rng.random()
         if r < 0.5:
             return self._asof()
@@ -91,7 +58,7 @@ class TemporalGen:
         return self._overlap()
 
     # -- as-of ------------------------------------------------------------
-    def _asof(self) -> TemporalCase:
+    def _asof(self) -> OracleCase:
         # >= 1 key: a key-less as-of would be a single global window —
         # outside the operator's partition-by-key scale contract
         keys = [f"k{i}" for i in range(self.rng.randint(1, 2))]
@@ -124,11 +91,11 @@ class TemporalGen:
 
             from keenwa_spark.operators.asof import asof_join
 
-            left = _values_df(spark, lrows, lnames, {"lts"})
+            left = values_df(spark, lrows, lnames, {"lts"})
             if rrows:
-                right = _values_df(spark, rrows, rnames, {"rts"})
+                right = values_df(spark, rrows, rnames, {"rts"})
             else:
-                right = _values_df(
+                right = values_df(
                     spark, [(0, *(0 for _ in keys), 0, 0)], rnames, {"rts"}
                 ).where("rid < 0")
             out = asof_join(
@@ -152,8 +119,8 @@ class TemporalGen:
         corr = " AND ".join([f"r.{k} = l.{k}" for k in keys] + [f"r.rts {cmp} l.lts"])
         agg = "max" if direction == "backward" else "min"
         arg = "arg_max" if direction == "backward" else "arg_min"
-        rsrc = _values_sql(rrows, rnames) if rrows else (
-            f"(SELECT * FROM {_values_sql([(0,) + (0,) * len(keys) + (0, 0)], rnames)} WHERE rid < 0)"
+        rsrc = values_sql(rrows, rnames) if rrows else (
+            f"(SELECT * FROM {values_sql([(0,) + (0,) * len(keys) + (0, 0)], rnames)} WHERE rid < 0)"
         )
         oracle = (
             f"SELECT l.lid, "
@@ -161,12 +128,12 @@ class TemporalGen:
             f"WHERE {corr}{tol_pred}) AS m_ts, "
             f"(SELECT {arg}(r.rv, r.rts) FROM {rsrc} r "
             f"WHERE {corr}{tol_pred}) AS m_v "
-            f"FROM {_values_sql(lrows, lnames)} l"
+            f"FROM {values_sql(lrows, lnames)} l"
         )
-        return TemporalCase("asof", spark_build, oracle)
+        return OracleCase("asof", spark_build, oracle)
 
     # -- point-in-interval ------------------------------------------------
-    def _range(self) -> TemporalCase:
+    def _range(self) -> OracleCase:
         keys = self._keys()
         n_p = self.rng.randint(3, 30)
         n_i = self.rng.randint(1, 20)
@@ -187,8 +154,8 @@ class TemporalGen:
         def spark_build(spark, prows=prows, irows=irows, keys=keys, bin_w=bin_w):
             from keenwa_spark.operators.range_join import range_join
 
-            pts = _values_df(spark, prows, pnames, {"pts"})
-            ivs = _values_df(spark, irows, inames, {"lo", "hi"})
+            pts = values_df(spark, prows, pnames, {"pts"})
+            ivs = values_df(spark, irows, inames, {"lo", "hi"})
             out = range_join(
                 pts, ivs, point_ts="pts", lo="lo", hi="hi",
                 on=keys or None, bin_width_seconds=bin_w,
@@ -200,13 +167,13 @@ class TemporalGen:
             + ["i.lo <= p.pts", "p.pts < i.hi"]
         )
         oracle = (
-            f"SELECT p.pid, i.iid FROM {_values_sql(prows, pnames)} p "
-            f"JOIN {_values_sql(irows, inames)} i ON {corr}"
+            f"SELECT p.pid, i.iid FROM {values_sql(prows, pnames)} p "
+            f"JOIN {values_sql(irows, inames)} i ON {corr}"
         )
-        return TemporalCase("range", spark_build, oracle)
+        return OracleCase("range", spark_build, oracle)
 
     # -- interval x interval overlap ---------------------------------------
-    def _overlap(self) -> TemporalCase:
+    def _overlap(self) -> OracleCase:
         keys = self._keys()
         n_l = self.rng.randint(2, 20)
         n_r = self.rng.randint(2, 20)
@@ -227,8 +194,8 @@ class TemporalGen:
         def spark_build(spark, lrows=lrows, rrows=rrows, keys=keys, bin_w=bin_w):
             from keenwa_spark.operators.range_join import interval_overlap_join
 
-            l = _values_df(spark, lrows, lnames, {"l_lo", "l_hi"})
-            r = _values_df(spark, rrows, rnames, {"r_lo", "r_hi"})
+            l = values_df(spark, lrows, lnames, {"l_lo", "l_hi"})
+            r = values_df(spark, rrows, rnames, {"r_lo", "r_hi"})
             out = interval_overlap_join(
                 l, r, l_lo="l_lo", l_hi="l_hi", r_lo="r_lo", r_hi="r_hi",
                 on=keys or None, bin_width_seconds=bin_w,
@@ -241,52 +208,7 @@ class TemporalGen:
                "l.l_lo < l.l_hi", "r.r_lo < r.r_hi"]
         )
         oracle = (
-            f"SELECT l.lid, r.rid FROM {_values_sql(lrows, lnames)} l "
-            f"JOIN {_values_sql(rrows, rnames)} r ON {corr}"
+            f"SELECT l.lid, r.rid FROM {values_sql(lrows, lnames)} l "
+            f"JOIN {values_sql(rrows, rnames)} r ON {corr}"
         )
-        return TemporalCase("overlap", spark_build, oracle)
-
-
-def run_temporal_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    """Generate ``n`` temporal cases from ``seed``; run the operator on
-    Spark and the oracle on DuckDB; return mismatches."""
-    from keenwa_spark import conformance as cf
-
-    gen = TemporalGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql,
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql,
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:500],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase("overlap", spark_build, oracle)

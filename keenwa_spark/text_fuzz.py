@@ -18,34 +18,17 @@ What randomized instances exercise that the hand oracles can't:
 
 Corpora come from the dedup fuzzer's generator (same cosmetic-noise
 model); labels are attached per doc. Deterministic by seed. Used by
-tools/text_fuzz.py (wide sweeps) and tests/test_fuzz.py (pinned-seed
+tools/fuzz.py text (wide sweeps) and tests/test_fuzz.py (pinned-seed
 corpus).
 """
 
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
-from keenwa_spark.dedup_fuzz import _D_NORM, DedupGen, _docs_df, _docs_sql
+from keenwa_spark.conformance import OracleCase, values_df
+from keenwa_spark.dedup_fuzz import _D_NORM, DedupGen, _docs_sql
 from keenwa_spark.pipeline.hashing import duck_hash64
-
-
-@dataclass
-class TextCase:
-    kind: str
-    spark_build: "object"
-    oracle_sql: str
-
-
-def _labeled_df(spark, docs, labels):
-    vals = ", ".join(
-        f"({i}, '{lab}', '{t}')" for (i, t), lab in zip(docs, labels)
-    )
-    return spark.sql(
-        "SELECT CAST(id AS BIGINT) AS id, CAST(lab AS STRING) AS lab, "
-        f"CAST(txt AS STRING) AS txt FROM (VALUES {vals}) AS v(id, lab, txt)"
-    )
 
 
 def _labeled_sql(docs, labels) -> str:
@@ -79,10 +62,10 @@ class TextGen:
             for i in range(rng.randint(1, 12))
         ]
 
-    def case(self) -> TextCase:
+    def case(self) -> OracleCase:
         return self.rng.choice([self._bpe, self._vote, self._fhash])()
 
-    def _bpe(self) -> TextCase:
+    def _bpe(self) -> OracleCase:
         docs = self._tie_heavy_corpus()
         rounds = self.rng.randint(1, 3)
 
@@ -90,7 +73,7 @@ class TextGen:
             from keenwa_spark.pipeline.bpe import bpe_merge_table
 
             return bpe_merge_table(
-                _docs_df(spark, docs), rounds=rounds, text_col="txt"
+                values_df(spark, docs, ["id", "txt"]), rounds=rounds, text_col="txt"
             )
 
         from keenwa_spark.queries.pipeline import _duck_bpe_ctes
@@ -104,9 +87,9 @@ class TextGen:
             _duck_bpe_ctes(rounds, source=_docs_sql(docs), text_col="txt")
             + f"\n    SELECT * FROM (\n      {arms}\n    ) ORDER BY round"
         )
-        return TextCase(f"bpe_r{rounds}", spark_build, oracle)
+        return OracleCase(f"bpe_r{rounds}", spark_build, oracle)
 
-    def _vote(self) -> TextCase:
+    def _vote(self) -> OracleCase:
         docs = self._corpora._corpus()
         labels = [self.rng.choice(["x", "y", "z"]) for _ in docs]
         mod = self.rng.choice([2, 3, 5])
@@ -116,7 +99,8 @@ class TextGen:
 
             from keenwa_spark.pipeline.classify import classify_eval
 
-            df = _labeled_df(spark, docs, labels)
+            rows = [(i, lab, t) for (i, t), lab in zip(docs, labels)]
+            df = values_df(spark, rows, ["id", "lab", "txt"])
             return classify_eval(
                 df,
                 F.col("id") % mod != 0,
@@ -160,9 +144,9 @@ class TextGen:
     FROM {_labeled_sql(docs, labels)} d LEFT JOIN pred p USING (id)
     WHERE d.id % {mod} = 0
     """
-        return TextCase(f"vote_m{mod}", spark_build, oracle)
+        return OracleCase(f"vote_m{mod}", spark_build, oracle)
 
-    def _fhash(self) -> TextCase:
+    def _fhash(self) -> OracleCase:
         docs = self._corpora._corpus()
         dim = self.rng.choice([4, 8, 16, 64])
 
@@ -172,7 +156,7 @@ class TextGen:
             from keenwa_spark.pipeline.features import feature_hash_vectors
 
             vecs = feature_hash_vectors(
-                _docs_df(spark, docs), dim=dim, text_col="txt", id_col="id"
+                values_df(spark, docs, ["id", "txt"]), dim=dim, text_col="txt", id_col="id"
             )
             return (
                 vecs.select("id", F.posexplode("fvec").alias("dim", "w"))
@@ -196,47 +180,4 @@ class TextGen:
     SELECT id, CAST(dim AS INT) AS dim, CAST(w AS DOUBLE) AS w
     FROM agg WHERE w <> 0
     """
-        return TextCase(f"fhash_d{dim}", spark_build, oracle)
-
-
-def run_text_fuzz(spark, duck, seed: int, n: int) -> list[dict]:
-    from keenwa_spark import conformance as cf
-
-    gen = TextGen(seed)
-    mismatches = []
-    for i in range(n):
-        case = gen.case()
-        try:
-            got = cf.canon_rows(
-                [tuple(r) for r in case.spark_build(spark).collect()],
-                ordered=False,
-            )
-        except Exception as e:  # noqa: BLE001 — the error IS the finding
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"spark: {e}"}
-            )
-            continue
-        try:
-            want = cf.canon_rows(
-                duck.execute(case.oracle_sql).fetchall(), ordered=False
-            )
-        except Exception as e:  # noqa: BLE001
-            mismatches.append(
-                {"i": i, "kind": case.kind, "oracle": case.oracle_sql[:400],
-                 "error": f"duckdb: {e}"}
-            )
-            continue
-        if got != want:
-            mismatches.append(
-                {
-                    "i": i,
-                    "kind": case.kind,
-                    "oracle": case.oracle_sql[:400],
-                    "spark_rows": len(got),
-                    "duck_rows": len(want),
-                    "spark_head": got[:4],
-                    "duck_head": want[:4],
-                }
-            )
-    return mismatches
+        return OracleCase(f"fhash_d{dim}", spark_build, oracle)

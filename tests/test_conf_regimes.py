@@ -17,7 +17,6 @@ one regime sample.)
 
 from __future__ import annotations
 
-import itertools
 import os
 import random
 
@@ -25,27 +24,11 @@ import pytest
 
 from keenwa_spark import conformance as cf
 
-_CONF_KEYS = (
-    "spark.sql.adaptive.enabled",
-    "spark.sql.cbo.enabled",
-    "spark.sql.autoBroadcastJoinThreshold",
-)
-
-#: full regime grid: AQE x CBO x broadcast {off, default}
-_GRID = [
-    {
-        "spark.sql.adaptive.enabled": str(aqe).lower(),
-        "spark.sql.cbo.enabled": str(cbo).lower(),
-        "spark.sql.autoBroadcastJoinThreshold": bcast,
-    }
-    for aqe, cbo, bcast in itertools.product(
-        (True, False), (True, False), ("-1", "10485760")
-    )
-]
+_CONF_KEYS = tuple(cf.REGIME_GRID[0])
 
 _SEED = int(os.environ.get("KEENWA_REGIME_SEED", "6"))
 _rng = random.Random(_SEED)
-_REGIMES = _rng.sample(_GRID, 3)
+_REGIMES = _rng.sample(cf.REGIME_GRID, 3)
 
 
 def _regime_id(regime: dict) -> str:

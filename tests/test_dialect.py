@@ -205,14 +205,13 @@ def test_in3vl_rewrite_fuzz_corpus(views, seed):
     polarity, nesting (COALESCE/CASE/multiple-IN/IS NULL observers),
     empty / NULL-bearing / correlated subqueries, plus WHERE-context
     INs that must stay untouched — strict Engine == DuckDB on the
-    original text, exactly. Wide sweeps: tools/in3vl_fuzz.py."""
-    import duckdb
+    original text, exactly. Wide sweeps: tools/fuzz.py in3vl."""
+    from keenwa_spark import conformance as cf
+    from keenwa_spark.in3vl_fuzz import In3vlGen
 
-    from keenwa_spark.conformance import duckdb_mini_catalog
-    from keenwa_spark.in3vl_fuzz import run_in3vl_fuzz
-
-    duck = duckdb_mini_catalog()
-    mis = run_in3vl_fuzz(views, duck, seed=seed, n=25)
+    cf.register_mini_catalog(views)
+    duck = cf.duckdb_mini_catalog()
+    mis = cf.run_cases(In3vlGen(seed), views, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -275,10 +274,11 @@ def test_in3vl_nested_fuzz_corpus(views, seed):
     """Pinned slice of the nested-projected-IN fuzz grammar (VERDICT
     r12 item 1): IN inside another projected IN's subquery body at 1-2
     levels, lhs-side scalar-subquery INs, both polarities everywhere.
-    Wide sweeps: tools/in3vl_fuzz.py --nested."""
-    from keenwa_spark.conformance import duckdb_mini_catalog
-    from keenwa_spark.in3vl_fuzz import run_in3vl_fuzz
+    Wide sweeps: tools/fuzz.py in3vl_nested."""
+    from keenwa_spark import conformance as cf
+    from keenwa_spark.in3vl_fuzz import NestedIn3vlGen
 
-    duck = duckdb_mini_catalog()
-    mis = run_in3vl_fuzz(views, duck, seed=seed, n=25, nested=True)
+    cf.register_mini_catalog(views)
+    duck = cf.duckdb_mini_catalog()
+    mis = cf.run_cases(NestedIn3vlGen(seed), views, duck, n=25)
     assert mis == [], mis[:3]

@@ -2,14 +2,14 @@
 generated query in the shared exact dialect must return identical
 multisets on Spark and DuckDB — the executable upgrade of the
 reference's seeded rule-order shuffle (src/testing.rs:57). Wider
-sweeps: tools/sql_fuzz.py."""
+sweeps: tools/fuzz.py sql."""
 
 from __future__ import annotations
 
 import pytest
 
 from keenwa_spark import conformance as cf
-from keenwa_spark.fuzz import TABLES, QueryGen, run_fuzz
+from keenwa_spark.fuzz import TABLES, QueryGen
 
 
 @pytest.fixture(scope="module")
@@ -27,8 +27,41 @@ def duck():
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_fuzz_corpus_cross_engine(mini, duck, seed):
-    mis = run_fuzz(mini, duck, seed=seed, n=60)
+    mis = cf.run_cases(QueryGen(seed), mini, duck, n=60)
     assert mis == [], mis[:3]
+
+
+def test_run_cases_reports_every_failure_kind(spark, duck):
+    """The clean sweeps are not vacuous: run_cases records a wrong
+    answer, a Spark-side error and a DuckDB-side error. The sweep tool's
+    family table names every generator module."""
+    import pathlib
+
+    from tools.fuzz import FAMILIES
+
+    def spark_fails(spark):
+        raise RuntimeError("boom")
+
+    class Stub:
+        cases = iter([
+            cf.OracleCase("wrong", lambda s: s.sql("SELECT 1 AS x"), "SELECT 2 AS x"),
+            cf.OracleCase("spark_err", spark_fails, "SELECT 1 AS x"),
+            cf.OracleCase("duck_err", lambda s: s.sql("SELECT 1 AS x"), "SELEC 1"),
+        ])
+
+        def case(self):
+            return next(self.cases)
+
+    wrong, spark_err, duck_err = cf.run_cases(Stub(), spark, duck, n=3)
+    assert wrong["kind"] == "wrong"
+    assert (wrong["spark_head"], wrong["duck_head"]) == ([(1,)], [(2,)])
+    assert spark_err["kind"] == "spark_err"
+    assert spark_err["error"].startswith("spark: ") and "boom" in spark_err["error"]
+    assert duck_err["kind"] == "duck_err" and duck_err["error"].startswith("duckdb: ")
+
+    pkg = pathlib.Path(cf.__file__).parent
+    modules = {p.stem for p in pkg.glob("*_fuzz.py")} | {"fuzz"}
+    assert {module for module, _gen in FAMILIES.values()} == modules
 
 
 def test_generator_is_deterministic():
@@ -180,10 +213,10 @@ def test_known_spark_grouping_sets_empty_input_bug(spark):
 def test_builder_fuzz_corpus_cross_engine(mini, duck, seed):
     """Every generated builder PROGRAM (PlanBuilder calls on Spark)
     must match its SQL rendering on DuckDB. Wider sweeps:
-    tools/builder_fuzz.py (2,000+ programs per round)."""
-    from keenwa_spark.builder_fuzz import run_builder_fuzz
+    tools/fuzz.py builder (2,000+ programs per round)."""
+    from keenwa_spark.builder_fuzz import ProgramGen
 
-    mis = run_builder_fuzz(mini, duck, seed=seed, n=40)
+    mis = cf.run_cases(ProgramGen(seed), mini, duck, n=40)
     assert mis == [], mis[:3]
 
 
@@ -226,10 +259,10 @@ def test_temporal_fuzz_corpus_cross_engine(spark, duck, seed):
     """asof / range / overlap joins on random instances vs DuckDB
     correlated-subquery and inequality-join oracles (timestamps as
     integer seconds both ways — no tz/precision trap in the compare).
-    Wider sweeps: tools/temporal_fuzz.py."""
-    from keenwa_spark.temporal_fuzz import run_temporal_fuzz
+    Wider sweeps: tools/fuzz.py temporal."""
+    from keenwa_spark.temporal_fuzz import TemporalGen
 
-    mis = run_temporal_fuzz(spark, duck, seed=seed, n=30)
+    mis = cf.run_cases(TemporalGen(seed), spark, duck, n=30)
     assert mis == [], mis[:3]
 
 
@@ -260,10 +293,10 @@ def test_ordered_fuzz_corpus_cross_engine(spark, duck, seed):
     """with_global_row_number / cumsum / prev_min on random integer
     data (mega-ties, nullable sum inputs, both directions, bucket
     counts 1..64, tie_bucket_col sub-splits) vs DuckDB's single-node
-    window oracles. Wider sweeps: tools/ordered_fuzz.py."""
-    from keenwa_spark.ordered_fuzz import run_ordered_fuzz
+    window oracles. Wider sweeps: tools/fuzz.py ordered."""
+    from keenwa_spark.ordered_fuzz import OrderedGen
 
-    mis = run_ordered_fuzz(spark, duck, seed=seed, n=25)
+    mis = cf.run_cases(OrderedGen(seed), spark, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -291,10 +324,10 @@ def test_state_fuzz_corpus_cross_engine(spark, duck, seed):
     / scd2_compress / interval_coalesce on random keyed instances (NULL
     keys/values/ops, tombstones, ts ties, touching-contained-empty
     intervals) vs independently-written ANSI-SQL oracles on DuckDB.
-    Wider sweeps: tools/state_fuzz.py."""
-    from keenwa_spark.state_fuzz import run_state_fuzz
+    Wider sweeps: tools/fuzz.py state."""
+    from keenwa_spark.state_fuzz import StateGen
 
-    mis = run_state_fuzz(spark, duck, seed=seed, n=30)
+    mis = cf.run_cases(StateGen(seed), spark, duck, n=30)
     assert mis == [], mis[:3]
 
 
@@ -327,10 +360,10 @@ def test_hyper_fuzz_corpus_cross_engine(spark, duck, seed):
     single-observation keys, counter resets, bucket boundaries) vs
     independently-written DuckDB oracles. Every compared number is
     integer-valued or a ratio of exact sub-2^53 integers. Wider
-    sweeps: tools/hyper_fuzz.py."""
-    from keenwa_spark.hyper_fuzz import run_hyper_fuzz
+    sweeps: tools/fuzz.py hyper."""
+    from keenwa_spark.hyper_fuzz import HyperGen
 
-    mis = run_hyper_fuzz(spark, duck, seed=seed, n=30)
+    mis = cf.run_cases(HyperGen(seed), spark, duck, n=30)
     assert mis == [], mis[:3]
 
 
@@ -360,10 +393,10 @@ def test_series_fuzz_corpus_cross_engine(spark, duck, seed):
     NOT-EXISTS dominance oracle — completely different algorithms),
     time_resample (LOCF grid) and time_resample_interpolate (linear
     fill, bit-identical fixed-order double arithmetic) on random
-    instances. Wider sweeps: tools/series_fuzz.py."""
-    from keenwa_spark.series_fuzz import run_series_fuzz
+    instances. Wider sweeps: tools/fuzz.py series."""
+    from keenwa_spark.series_fuzz import SeriesGen
 
-    mis = run_series_fuzz(spark, duck, seed=seed, n=25)
+    mis = cf.run_cases(SeriesGen(seed), spark, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -396,10 +429,10 @@ def test_sketch_fuzz_corpus_cross_engine(spark, duck, seed):
     multiplicities — vs DuckDB oracles replaying the identical frozen
     md5-affine arithmetic. Estimates must match EXACTLY, false
     positives and collision overshoot included. Wider sweeps:
-    tools/sketch_fuzz.py."""
-    from keenwa_spark.sketch_fuzz import run_sketch_fuzz
+    tools/fuzz.py sketch."""
+    from keenwa_spark.sketch_fuzz import SketchGen
 
-    mis = run_sketch_fuzz(spark, duck, seed=seed, n=25)
+    mis = cf.run_cases(SketchGen(seed), spark, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -433,10 +466,10 @@ def test_dedup_fuzz_corpus_cross_engine(spark, duck, seed):
     string-level all-pairs definition — structurally different from
     Spark's inverted hash index; LSH runs random band geometries and
     tiny max_bucket caps against a window-count replay. Wider sweeps:
-    tools/dedup_fuzz.py."""
-    from keenwa_spark.dedup_fuzz import run_dedup_fuzz
+    tools/fuzz.py dedup."""
+    from keenwa_spark.dedup_fuzz import DedupGen
 
-    mis = run_dedup_fuzz(spark, duck, seed=seed, n=25)
+    mis = cf.run_cases(DedupGen(seed), spark, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -470,10 +503,10 @@ def test_text_fuzz_corpus_cross_engine(spark, duck, seed):
     the token-vote classifier under vote ties / OOV abstains /
     label-skewed slices, and feature hashing across dims 4..64 with
     bucket-by-bucket sign cancellation. Wider sweeps:
-    tools/text_fuzz.py."""
-    from keenwa_spark.text_fuzz import run_text_fuzz
+    tools/fuzz.py text."""
+    from keenwa_spark.text_fuzz import TextGen
 
-    mis = run_text_fuzz(spark, duck, seed=seed, n=20)
+    mis = cf.run_cases(TextGen(seed), spark, duck, n=20)
     assert mis == [], mis[:3]
 
 
@@ -507,10 +540,10 @@ def test_split_fuzz_corpus_cross_engine(spark, duck, seed):
     sparse non-contiguous ids, skewed labels, random salts — vs
     DuckDB bucket/window replays. Split bugs poison downstream
     training silently, hence the dedicated axis. Wider sweeps:
-    tools/split_fuzz.py."""
-    from keenwa_spark.split_fuzz import run_split_fuzz
+    tools/fuzz.py split."""
+    from keenwa_spark.split_fuzz import SplitGen
 
-    mis = run_split_fuzz(spark, duck, seed=seed, n=25)
+    mis = cf.run_cases(SplitGen(seed), spark, duck, n=25)
     assert mis == [], mis[:3]
 
 
@@ -548,7 +581,7 @@ def test_stream_fuzz_corpus_cross_engine(spark, duck, seed):
     the one-sided watermark contract as a bounds law (lower = rows
     guaranteed within the delay, upper = all rows, unique append
     emissions, exact when the bounds coincide). Wider sweeps:
-    tools/stream_fuzz.py."""
+    tools/fuzz.py stream."""
     from keenwa_spark.stream_fuzz import run_stream_fuzz
 
     mis = run_stream_fuzz(spark, duck, seed=seed, n=12)

@@ -289,7 +289,7 @@ class TestKillRestartRecovery:
     DuckDB-oracle result — windowed aggregation state, dedup state,
     and stream-stream join buffers all recover; the sink manifest
     makes a cancelled half-written batch invisible. Wide sweeps:
-    tools/stream_fuzz.py --family=ck."""
+    tools/fuzz.py stream:ck."""
 
     def test_kill_restart_cases_match_oracle_exactly(self, spark):
         import duckdb
@@ -305,8 +305,8 @@ class TestKillRestartRecovery:
         the second kill lands during the first resume (or stages a
         second clean-boundary crash), optionally under a SECOND
         shuffle-partition resize — state must still recover to exact
-        oracle equality. Wide sweeps: tools/stream_fuzz.py
-        --family=ck2."""
+        oracle equality. Wide sweeps: tools/fuzz.py
+        stream:ck2."""
         import duckdb
 
         from keenwa_spark.stream_fuzz import run_stream_fuzz

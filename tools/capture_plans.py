@@ -1,12 +1,13 @@
-"""Capture .explain('formatted') for every headline query (r14
-optimization round): plans/r14/<query>_<tag>.txt.
+"""Capture .explain('formatted') for every headline query of one
+optimization round: plans/<round>/<query>_<tag>.txt.
 
 Usage:
-    python tools/r14_capture_plans.py before [names...]
-    python tools/r14_capture_plans.py after  [names...]
+    python tools/capture_plans.py ROUND before [names...]
+    python tools/capture_plans.py ROUND after  [names...]
 
-Default name set = bench.HEADLINE. The files are committed so the
-judge can check plan claims without running Spark.
+ROUND names the output directory (e.g. r14). Default name set =
+bench.HEADLINE. The files are committed so plan claims can be checked
+without running Spark.
 """
 
 from __future__ import annotations
@@ -22,13 +23,15 @@ from keenwa_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or bench.HEADLINE
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(bench.BENCH_DIR, "plans", "r14")
+    out_dir = os.path.join(bench.BENCH_DIR, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     registry = load_all()
-    spark = get_spark("r14_capture_plans")
+    spark = get_spark("capture_plans")
     registry["get_scan"].fn(spark, sf_dir).count()  # warm file listing
     for name in names:
         df = registry[name].fn(spark, sf_dir)
