@@ -2,27 +2,50 @@
 
 The missing last step of every dedup pipeline: LSH/Jaccard emit PAIRS,
 but retention decisions need GROUPS ("keep one doc per connected
-component"). Connected components via iterative min-label propagation —
-each round every node adopts the smallest label among itself and its
-neighbors; rounds double the propagation radius, so convergence takes
-O(log(diameter)) rounds (near-dup components are tiny — 2-3 rounds).
+component"). ``connected_components`` labels every node of the pair
+graph with the smallest doc_id it reaches, by one of two paths chosen
+by the pair count it measures:
 
-Scale design: each round is two shuffles (join on node, min-aggregate
-on node) over the EDGE list, which for dedup is far smaller than the
-corpus. The driver-side loop only reads a convergence sum OBSERVED on
-the round's own materialization job (r14) — no data ever collects and
-no extra per-round action runs. This is the standard large-graph CC pattern (GraphX /
-GraphFrames use the same alternating join-aggregate rounds).
+- **Small graphs (at most ``SMALL_GRAPH_MAX_PAIRS`` pairs).** The pair
+  list is collected once (Arrow) and solved on the driver by a
+  vectorised numpy union-find (``min_id_components``). The labels come
+  back as a LocalRelation, which the planner sizes exactly, so the
+  consumer's components join broadcasts under
+  ``autoBroadcastJoinThreshold``. No per-round Spark job runs.
+- **Larger graphs.** Iterative min-label propagation on Spark: each
+  round is one hop (every node adopts the smallest label among itself
+  and its neighbours) plus one pointer jump, so convergence takes
+  O(log(diameter)) rounds. Each round is two shuffles over the EDGE
+  list, which for dedup is far smaller than the corpus; the driver
+  only reads a convergence sum OBSERVED on the round's own
+  materialization job — no data collects and no extra per-round action
+  runs. This is the standard large-graph CC pattern (GraphX /
+  GraphFrames use the same alternating join-aggregate rounds). The
+  checkpointed labels carry no size, so consumer joins fall back to a
+  sort-merge join (or an AQE runtime conversion) instead of a forced
+  broadcast.
 
-Determinism: labels are min(doc_id), so results are unique regardless
-of execution order — exactly oracle-checkable (DuckDB recursive CTE
-computes the same min-reachable-id closure).
+Determinism: labels are min(doc_id) on both paths, so results are
+unique regardless of execution order or path — exactly
+oracle-checkable (DuckDB recursive CTE computes the same
+min-reachable-id closure). Pairs with a null endpoint are not edges.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+#: Largest pair list solved on the driver. Its graph has at most 2M
+#: nodes, so the (doc_id, component) LocalRelation is at most
+#: 2M x 24 B = 48 MB by Catalyst's row-size estimate: under the
+#: session's 64 MB autoBroadcastJoinThreshold (and under Arrow's 48 MB
+#: local-relation threshold, so createDataFrame keeps it a
+#: LocalRelation), and small in driver memory. Above it the distributed
+#: loop is the only path (SCALE.md's 100x graph has 26.8M pairs).
+SMALL_GRAPH_MAX_PAIRS = 1_000_000
 
 
 def connected_components(
@@ -32,14 +55,85 @@ def connected_components(
 
     Returns (doc_id, component) where component = min doc_id reachable.
     Only nodes appearing in pairs are returned (singletons are their own
-    component by definition — callers union them in if needed).
+    component by definition — callers union them in if needed). A pair
+    with a null endpoint is dropped: it is not an edge.
 
-    Each round does (a) a one-hop min-label adoption and (b) a pointer
-    jump l(v) := l(l(v)) — the shortcutting step that makes convergence
-    O(log diameter) instead of O(diameter) (a bare one-hop propagation
-    needs 30 rounds for a 31-node chain; hop+jump needs ~6).
-    Raises RuntimeError if not converged within ``max_rounds`` — never
-    silently returns partially-merged components.
+    The pair list is read once: lineage cut by a lazy local checkpoint,
+    then at most ``SMALL_GRAPH_MAX_PAIRS + 1`` rows collected. If that
+    is the whole list, the graph is solved on the driver
+    (``min_id_components``) and returned as a LocalRelation — a
+    consumer's executed plan then shows a ``LocalTableScan``, which
+    records the path taken. Otherwise the distributed hop/jump loop
+    runs over the checkpointed pairs (``max_rounds`` bounds it; it
+    raises RuntimeError rather than return partially-merged
+    components). Both paths return the same canonical labels.
+    """
+    pairs = (
+        pairs.select("id_a", "id_b")
+        .where(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
+        .localCheckpoint(eager=False)
+    )
+    head = pairs.limit(SMALL_GRAPH_MAX_PAIRS + 1).toPandas()
+    if len(head) > SMALL_GRAPH_MAX_PAIRS:
+        return _distributed_components(pairs, max_rounds)
+    if head.empty:
+        # OptimizeLimitZero turns this into an empty LocalRelation that
+        # keeps the id type; pandas cannot (an empty frame skips Arrow)
+        return pairs.select(
+            F.col("id_a").alias("doc_id"), F.col("id_a").alias("component")
+        ).limit(0)
+    nodes, component = min_id_components(
+        head["id_a"].to_numpy(), head["id_b"].to_numpy()
+    )
+    # Arrow createDataFrame of a pandas frame plans as a LocalRelation
+    # with an exact size (a Python list would become a pickled-RDD scan)
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": nodes, "component": component})
+    )
+
+
+def min_id_components(
+    id_a: np.ndarray, id_b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side connected components of the edges ``id_a[i] --
+    id_b[i]``: returns (nodes, component), nodes sorted and unique,
+    component[i] the smallest node reachable from nodes[i].
+
+    Vectorised union-find over node indices, no Python loop per edge.
+    Each round hooks every root that has an edge to a smaller root onto
+    the smallest such root (``np.minimum.at``), then pointer-jumps until
+    every tree is a star, and drops edges whose ends now share a root.
+    Hooks only ever point to a smaller index, so each root is the
+    smallest index in its set — and, the nodes being sorted, the
+    smallest id. A root with a live edge that does not hook has only
+    larger neighbours, and each of them hooks onto a root no larger than
+    it; so within two rounds every such root merges, and the root count
+    of each component at least halves every two rounds.
+    """
+    nodes, idx = np.unique(np.concatenate([id_a, id_b]), return_inverse=True)
+    a, b = idx[: len(id_a)], idx[len(id_a) :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return nodes, nodes[parent]
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _distributed_components(pairs: DataFrame, max_rounds: int) -> DataFrame:
+    """The Spark hop/jump loop over the checkpointed, null-free
+    ``pairs``. Each round does (a) a one-hop min-label adoption and (b)
+    a pointer jump l(v) := l(l(v)) — the shortcutting step that makes
+    convergence O(log diameter) instead of O(diameter) (a bare one-hop
+    propagation needs 30 rounds for a 31-node chain; hop+jump needs
+    ~6). Raises RuntimeError if not converged within ``max_rounds``.
     """
     # both directions PLUS a self-loop per endpoint: with (v, v) rows
     # present, every per-src min over joined labels already includes
@@ -145,15 +239,15 @@ def dedup_groups(
     a keep flag (representative = min doc_id of the component;
     singletons keep themselves).
 
-    The components side holds only docs that appear in near-dup pairs
-    — bounded by the candidate set, orders of magnitude smaller than
-    the corpus — so it is broadcast (r14): the checkpointed-RDD label
-    frame carries no stats and AQE otherwise leaves a corpus-sized
-    SortMergeJoin in place (pinned: tests/test_plan_shape.py census)."""
+    No broadcast hint: a small graph's components come back as a
+    sized LocalRelation, which the planner broadcasts under
+    autoBroadcastJoinThreshold; a large graph's checkpointed labels
+    have no size and get a sort-merge join instead of an oversized
+    broadcast (see ``connected_components``)."""
     comp = connected_components(pairs)
     return (
         docs.select(F.col(id_col))
-        .join(F.broadcast(comp), id_col, "left")
+        .join(comp, id_col, "left")
         .withColumn("component", F.coalesce("component", F.col(id_col)))
         .withColumn("keep", (F.col(id_col) == F.col("component")))
     )
@@ -191,8 +285,8 @@ def cluster_keep_by_priority(
         prio = F.when(F.col(source_col) == F.lit(str(k)), int(v)).otherwise(prio)
     labeled = (
         df.select(id_col, source_col)
-        # broadcast: same bounded-components argument as dedup_groups
-        .join(F.broadcast(comp), id_col, "left")
+        # no hint: the planner sizes comp (see dedup_groups)
+        .join(comp, id_col, "left")
         .withColumn("component", F.coalesce("component", F.col(id_col)))
         .withColumn("priority", prio.cast("bigint"))
     )

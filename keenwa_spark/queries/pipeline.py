@@ -146,7 +146,10 @@ def _duck_lsh_pairs_sql() -> str:
     "(band, bucket-key), within-bucket self-join, distinct pairs — NEVER "
     "an all-pairs crossJoin; candidate count is data-dependent. Degenerate "
     "buckets (>1000 docs) dropped, the production skew guard "
-    "(pipeline/dedup.py minhash_lsh_pairs).",
+    "(pipeline/dedup.py minhash_lsh_pairs). The pair count is what sizes "
+    "connected components downstream: up to 1M pairs solve on the driver "
+    "(pipeline/clustering.py SMALL_GRAPH_MAX_PAIRS), more run the "
+    "distributed rounds.",
     tags=("pipeline", "dedup", "minhash", "lsh"),
 )
 def pl_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,9 +177,10 @@ def pl_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            d.doc_id = COALESCE(c.component, d.doc_id) AS keep
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
     """,
-    doc="Near-dup CLUSTERING: LSH pairs -> connected components (iterative "
-    "min-label propagation, O(log diameter) join+agg rounds — the "
-    "GraphX-style large-graph CC pattern) -> per-doc keep/drop decision "
+    doc="Near-dup CLUSTERING: LSH pairs -> connected components (a driver "
+    "numpy union-find up to 1M pairs; above it iterative min-label "
+    "propagation, O(log diameter) join+agg rounds — the GraphX-style "
+    "large-graph CC pattern) -> per-doc keep/drop decision "
     "(representative = min id). Oracle computes the same closure with a "
     "DuckDB recursive CTE (pipeline/clustering.py). Note: WITH RECURSIVE "
     "lives in the ORACLE only — the engine's own dialect rejects it, "
@@ -945,20 +949,18 @@ def pl_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents")
     # stats already carries doc_id: no docs⋈stats self-join needed. The
     # ONE remaining doc_id join (stats ⋈ components) is algorithmically
-    # required — and its right side is only the docs that appear in
-    # near-dup pairs, not the corpus (singletons coalesce to
-    # themselves), so it is BROADCAST (r14): the components side is
-    # bounded by the LSH candidate set — the same tiny-by-construction
-    # argument lsh_verified_pairs broadcasts its candidate ids on —
-    # and the checkpointed-RDD side carries no stats, so AQE never
-    # converts the SortMergeJoin on its own (executed-plan census pin in
-    # tests/test_plan_shape.py: SMJ 1 -> 0, Exchange 2 -> 1).
-    # Without the hint the CORPUS-sized stats frame pays the join's
-    # exchange + sort.
+    # required; its right side holds only the docs that appear in
+    # near-dup pairs (singletons coalesce to themselves). No broadcast
+    # hint: a small pair graph's components are a LocalRelation with an
+    # exact size, so the planner broadcasts them on its own and the
+    # corpus-sized stats frame skips the join's exchange + sort
+    # (executed-plan census pin in tests/test_plan_shape.py); a large
+    # graph's unsized labels get a sort-merge join, not an oversized
+    # broadcast.
     stats = text_stats(docs).select("doc_id", "n_words")
     comp = connected_components(minhash_lsh_pairs(docs))
     return (
-        stats.join(F.broadcast(comp), "doc_id", "left")
+        stats.join(comp, "doc_id", "left")
         .withColumn("component", F.coalesce("component", F.col("doc_id")))
         .filter((F.col("n_words") >= 30) & (F.col("doc_id") == F.col("component")))
         .select("doc_id", "n_words", "component")

@@ -90,6 +90,23 @@ def _reclaim(d: str) -> None:
         pass  # tombstone is best-effort; the warning already fired
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: 70% of the
+    machine's memory, never above 48g. A fixed 48g on a smaller machine
+    lets a large driver-side job grow past physical memory until the
+    kernel kills the process, instead of failing with a JVM OOM."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(cap_mb, total_mb * 7 // 10)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(app_name: str = "keenwa_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -112,7 +129,10 @@ def get_spark(app_name: str = "keenwa_spark", master: str | None = None) -> Spar
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")

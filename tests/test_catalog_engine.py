@@ -135,3 +135,18 @@ def test_materialize_index_eliminates_exchange_and_sort(spark):
     assert len(files) == 8, files
     with pytest.raises(ArgumentError):
         cat.materialize_index("no_such_index")
+
+
+def test_default_driver_memory_fits_the_machine():
+    """With SPARK_DRIVER_MEMORY unset, the driver heap is 70% of
+    MemTotal, never above 48g, so a driver-side job fails with a JVM
+    OOM instead of outgrowing physical memory."""
+    from keenwa_spark.session import default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        total_mb = next(
+            int(line.split()[1]) // 1024 for line in f if line.startswith("MemTotal:")
+        )
+    got = default_driver_memory()
+    assert got == f"{min(48 * 1024, total_mb * 7 // 10)}m"
+    assert int(got[:-1]) < total_mb

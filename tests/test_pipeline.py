@@ -585,92 +585,242 @@ class TestY4MCodec:
             assert got == want and len(got) > 0, name
 
 
-def test_connected_components_observe_fusion(spark):
-    """r14: the convergence sum rides the round's checkpoint job as an
-    observed metric instead of a separate collect-aggregate action.
-    Pin (a) multi-round correctness on a 31-node chain (hop+jump needs
-    several rounds, so the fused sum gates a real loop, not just init)
-    and (b) that the fused shape runs strictly fewer jobs than the
-    collect-sum reference on the same input."""
+def _cc_reference(pairs, max_rounds=25):
+    """The r13 shape of the distributed connected-components loop: lazy
+    checkpoints and a collect()ed label sum per round, with no
+    observation fused into the round's job. A pair with a null
+    endpoint is not an edge."""
     from pyspark.sql import functions as F
 
-    from keenwa_spark.pipeline.clustering import connected_components
+    pairs = pairs.dropna(subset=["id_a", "id_b"])
+    edges = (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        .union(pairs.select(F.col("id_a").alias("src"), F.col("id_a").alias("dst")))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_b").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    labels = (
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("label"))
+        .localCheckpoint(eager=False)
+    )
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 31)] + [(40, 41), (41, 42), (50, 50)],
-        "id_a LONG, id_b LONG",
-    ).localCheckpoint(eager=True)
+    def label_sum(frame):
+        return frame.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ).collect()[0].s
 
-    def reference(pairs, max_rounds=25):
-        # the r13 shape: lazy checkpoint + a collect()ed label-sum per round
-        edges = (
-            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-            .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-            .union(pairs.select(F.col("id_a").alias("src"), F.col("id_a").alias("dst")))
-            .union(pairs.select(F.col("id_b").alias("src"), F.col("id_b").alias("dst")))
-            .distinct()
-            .localCheckpoint(eager=False)
+    prev = label_sum(labels)
+    for _ in range(max_rounds):
+        hopped = (
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("label").alias("label"))
         )
-        labels = (
-            edges.groupBy(F.col("src").alias("node"))
-            .agg(F.min("dst").alias("label"))
-            .localCheckpoint(eager=False)
+        jumped = (
+            hopped.alias("a")
+            .join(
+                hopped.select(
+                    F.col("node").alias("jnode"), F.col("label").alias("jlabel")
+                ),
+                F.col("a.label") == F.col("jnode"),
+                "left",
+            )
+            .select(
+                F.col("a.node").alias("node"),
+                F.least(
+                    F.col("a.label"), F.coalesce("jlabel", "a.label")
+                ).alias("label"),
+            )
         )
-
-        def label_sum(frame):
-            return frame.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0].s
-
-        prev = label_sum(labels)
-        for _ in range(max_rounds):
-            hopped = (
-                edges.join(labels, edges.dst == labels.node)
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.min("label").alias("label"))
+        labels = jumped.localCheckpoint(eager=False)
+        new = label_sum(labels)
+        if new == prev:
+            return labels.select(
+                F.col("node").alias("doc_id"), F.col("label").alias("component")
             )
-            jumped = (
-                hopped.alias("a")
-                .join(
-                    hopped.select(
-                        F.col("node").alias("jnode"), F.col("label").alias("jlabel")
-                    ),
-                    F.col("a.label") == F.col("jnode"),
-                    "left",
-                )
-                .select(
-                    F.col("a.node").alias("node"),
-                    F.least(
-                        F.col("a.label"), F.coalesce("jlabel", "a.label")
-                    ).alias("label"),
-                )
-            )
-            labels = jumped.localCheckpoint(eager=False)
-            new = label_sum(labels)
-            if new == prev:
-                return labels.select(
-                    F.col("node").alias("doc_id"), F.col("label").alias("component")
-                )
-            prev = new
-        raise RuntimeError("no converge")
+        prev = new
+    raise RuntimeError("no converge")
 
+
+def _cc_rows_and_jobs(spark, group, cc, pairs):
+    """The frame ``cc(pairs)``, its sorted (doc_id, component) rows and
+    the number of Spark jobs that building and collecting it ran."""
     sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        comp = cc(pairs)
+        rows = sorted((r.doc_id, r.component) for r in comp.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return comp, rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def run_in_group(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            rows = sorted((r.doc_id, r.component) for r in fn(pairs).collect())
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    got_ref, jobs_ref = run_in_group("cc_ref_r13", reference)
-    got_new, jobs_new = run_in_group("cc_new_r14", connected_components)
+#: a 31-node chain (several hop+jump rounds), a 3-node path and a self-pair
+_CC_CHAIN = [(i, i + 1) for i in range(1, 31)] + [(40, 41), (41, 42), (50, 50)]
+
+
+def test_connected_components_observe_fusion(spark, monkeypatch):
+    """r14: the distributed loop's convergence sum rides the round's
+    checkpoint job as an observed metric instead of a separate
+    collect-aggregate action. Pin (a) multi-round correctness on a
+    31-node chain (hop+jump needs several rounds, so the fused sum
+    gates a real loop, not just init) and (b) that the fused shape runs
+    strictly fewer jobs than the collect-sum reference on the same
+    input. The loop is forced: the chain is small enough for the
+    driver path."""
+    from keenwa_spark.pipeline import clustering
+
+    monkeypatch.setattr(clustering, "SMALL_GRAPH_MAX_PAIRS", 0)
+    pairs = spark.createDataFrame(_CC_CHAIN, "id_a LONG, id_b LONG").localCheckpoint(
+        eager=True
+    )
+    _, got_ref, jobs_ref = _cc_rows_and_jobs(spark, "cc_ref_r13", _cc_reference, pairs)
+    _, got_new, jobs_new = _cc_rows_and_jobs(
+        spark, "cc_new_r14", clustering.connected_components, pairs
+    )
 
     # chain 1..31 all collapse to 1; 40-42 to 40; self-pair 50 stays 50
     assert got_new == got_ref
     assert {c for _, c in got_new} == {1, 40, 50}
     assert jobs_new < jobs_ref, (jobs_new, jobs_ref)
+
+
+_CC_CASES = {
+    "chain": _CC_CHAIN,
+    "reversed": [(b, a) for a, b in _CC_CHAIN],
+    "duplicates": _CC_CHAIN + _CC_CHAIN + [(b, a) for a, b in _CC_CHAIN[:5]],
+    "self_pair": [(7, 7)],
+    "empty": [],
+    "null_endpoint": [(1, 2), (2, None), (None, 3), (None, None), (5, 6)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_both_paths_match_reference(spark, monkeypatch, case):
+    """Both connected-components paths give the reference's min-id
+    labels: the driver union-find (the default for a graph this small)
+    and the distributed hop/jump loop (forced with
+    SMALL_GRAPH_MAX_PAIRS = 0). A null endpoint is not an edge on
+    either path. The path taken shows in a consumer's executed plan:
+    the driver path's labels scan as a LocalTableScan. On every
+    non-empty graph the driver path runs fewer jobs than the loop,
+    which runs fewer than the collect-sum reference. An empty graph has
+    at most 0 pairs, so it is solved on the driver at either threshold,
+    and its empty labels fold the consumer's join away."""
+    from pyspark.sql import functions as F
+
+    from keenwa_spark.pipeline import clustering
+    from keenwa_spark.plans import executed_plan_text
+
+    pairs = spark.createDataFrame(
+        _CC_CASES[case], "id_a LONG, id_b LONG"
+    ).localCheckpoint(eager=True)
+    ids = spark.range(0, 60).select(F.col("id").alias("doc_id"))
+
+    def consumer_plan(comp):
+        joined = ids.join(comp, "doc_id", "left")
+        joined.collect()
+        return executed_plan_text(joined)
+
+    _, got_ref, jobs_ref = _cc_rows_and_jobs(
+        spark, f"cc_ref_{case}", _cc_reference, pairs
+    )
+    small, got_small, jobs_small = _cc_rows_and_jobs(
+        spark, f"cc_small_{case}", clustering.connected_components, pairs
+    )
+    monkeypatch.setattr(clustering, "SMALL_GRAPH_MAX_PAIRS", 0)
+    dist, got_dist, jobs_dist = _cc_rows_and_jobs(
+        spark, f"cc_dist_{case}", clustering.connected_components, pairs
+    )
+
+    assert got_small == got_ref
+    assert got_dist == got_ref
+    assert all(d is not None for d, _ in got_ref)
+    if case == "empty":
+        # the empty labels fold the consumer's join away entirely
+        assert got_ref == []
+        return
+    assert "LocalTableScan" in consumer_plan(small)
+    assert "LocalTableScan" not in consumer_plan(dist)
+    assert jobs_small < jobs_dist < jobs_ref, (jobs_small, jobs_dist, jobs_ref)
+
+
+def test_min_id_components_matches_bfs():
+    """The driver solver against a brute-force BFS on seeded random
+    graphs (sparse and dense, self-pairs and duplicate edges included),
+    plus a 10k-node chain in shuffled id order — the largest diameter
+    for a given size."""
+    from collections import defaultdict, deque
+
+    import numpy as np
+
+    from keenwa_spark.pipeline.clustering import min_id_components
+
+    def bfs_components(a, b):
+        adj = defaultdict(set)
+        for x, y in zip(a.tolist(), b.tolist()):
+            adj[x].add(y)
+            adj[y].add(x)
+        comp = {}
+        for start in sorted(adj):
+            if start in comp:
+                continue
+            comp[start] = start
+            queue = deque([start])
+            while queue:
+                for nb in adj[queue.popleft()]:
+                    if nb not in comp:
+                        comp[nb] = start
+                        queue.append(nb)
+        return comp
+
+    rng = np.random.default_rng(4)
+    graphs = []
+    for n_nodes, n_edges in ((1, 1), (5, 3), (50, 30), (200, 150), (1000, 2000), (10**9, 500)):
+        graphs.append(
+            (
+                rng.integers(0, n_nodes, n_edges),
+                rng.integers(0, n_nodes, n_edges),
+            )
+        )
+    chain = rng.permutation(10_000).astype(np.int64)
+    graphs.append((chain[:-1], chain[1:]))
+    for a, b in graphs:
+        nodes, component = min_id_components(a, b)
+        want = bfs_components(a, b)
+        assert nodes.tolist() == sorted(want)
+        assert dict(zip(nodes.tolist(), component.tolist())) == want
+    assert set(component.tolist()) == {0}
+
+
+def test_components_join_is_not_hinted(views):
+    """The corpus-curation components join carries no broadcast hint:
+    at sf0.001 the driver path's LocalRelation is broadcast by the
+    planner on its own size (one BroadcastHashJoin, no SortMergeJoin),
+    while with autoBroadcastJoinThreshold = -1 the same join falls back
+    to a sort-merge join and keeps its result."""
+    from keenwa_spark.plans import summarize
+    from keenwa_spark.queries import load_all
+    from tests.conftest import SF_DIR
+
+    fn = load_all()["pl_corpus_curation"].fn
+    df = fn(views, SF_DIR)
+    want = sorted(df.collect())
+    s = summarize(df)
+    assert (s.broadcast_joins, s.sort_merge_joins) == (1, 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = views.conf.get(key)
+    views.conf.set(key, "-1")
+    try:
+        off = fn(views, SF_DIR)
+        assert sorted(off.collect()) == want
+        s = summarize(off)
+        assert (s.broadcast_joins, s.sort_merge_joins) == (0, 1)
+    finally:
+        views.conf.set(key, prev)
 
 
 def test_lsh_bucket_skew_observed_on_viral_input(spark):

@@ -214,12 +214,11 @@ def test_q8_star_join_all_broadcast(views):
         # audit table (identical at sf0.001 and sf0.01; the py=1 cells
         # are the documented Arrow-batched IVF-assignment crossover,
         # the nlj cells are broadcast NLJs of a K-row query/model side)
-        # r14: the final stats ⋈ components left join broadcasts the
-        # components side explicitly (bounded by the LSH candidate
-        # set; the checkpointed-RDD side has no stats so AQE only
-        # converted the join AFTER the corpus-sized stats exchange had
-        # materialized) — both hash exchanges leave the plan:
-        # was (1,0,0,0,3,0)
+        # the final stats ⋈ components left join broadcasts the
+        # components side with no hint: a pair graph this small is
+        # solved on the driver into a LocalRelation the planner sizes
+        # exactly, so the corpus-sized stats side is never shuffled
+        # (was (1,0,0,0,3,0) while the components side was shuffled)
         ("pl_corpus_curation", (1, 0, 0, 0, 1, 0)),
         ("pl_minhash_lsh_pairs", (0, 0, 0, 0, 2, 0)),
         ("pl_ann_pq_refined_topk", (2, 0, 2, 0, 6, 1)),

@@ -193,10 +193,19 @@ def probe_cc(spark) -> None:
     """LSH -> connected components over the salted near-dup corpus:
     every base doc's ~100 copies must collapse to ONE component, so the
     component count is a SEMANTIC check at scale (expect ~n_base), not
-    just a wall-clock row."""
-    from keenwa_spark.pipeline.clustering import connected_components
+    just a wall-clock row.
+
+    Each row names the path connected_components took, read from the
+    labels' plan: ``driver`` (a LocalRelation: at most
+    clustering.SMALL_GRAPH_MAX_PAIRS pairs) or ``distributed`` (the
+    hop/jump loop). At 1x and 10x a second row forces the distributed
+    loop (threshold 0) and must give the same node and component
+    counts; 100x is above the threshold, so its one row must already
+    be distributed."""
+    from keenwa_spark.pipeline import clustering
     from keenwa_spark.pipeline.dedup import minhash_lsh_pairs
 
+    default_max = clustering.SMALL_GRAPH_MAX_PAIRS
     print("## lsh -> connected_components (1x/10x/100x; component count ~= base docs)")
     for factor in (1, 10, 100):
         path = stage_documents(spark, factor)
@@ -207,15 +216,30 @@ def probe_cc(spark) -> None:
         )
         n_pairs = pairs.count()
         t_pairs = time.time() - t0
-        t0 = time.time()
-        cc = connected_components(pairs)
-        n_comp = cc.select("component").distinct().count()
-        n_nodes = cc.count()
-        t_cc = time.time() - t0
-        print(
-            f"{factor}x: pairs {n_pairs} in {t_pairs:.1f}s; "
-            f"CC {n_nodes} nodes -> {n_comp} components in {t_cc:.1f}s"
-        )
+        counts = set()
+        for max_pairs in (default_max, 0) if factor < 100 else (default_max,):
+            clustering.SMALL_GRAPH_MAX_PAIRS = max_pairs
+            try:
+                t0 = time.time()
+                cc = clustering.connected_components(pairs)
+                n_comp = cc.select("component").distinct().count()
+                n_nodes = cc.count()
+                t_cc = time.time() - t0
+            finally:
+                clustering.SMALL_GRAPH_MAX_PAIRS = default_max
+            plan = cc._jdf.queryExecution().optimizedPlan().toString()
+            cc_path = "driver" if "LocalRelation" in plan else "distributed"
+            forced = " (forced)" if max_pairs == 0 else ""
+            print(
+                f"{factor}x: pairs {n_pairs} in {t_pairs:.1f}s; "
+                f"CC {cc_path}{forced} {n_nodes} nodes -> {n_comp} "
+                f"components in {t_cc:.1f}s"
+            )
+            counts.add((n_nodes, n_comp))
+        if len(counts) != 1:
+            raise RuntimeError(f"{factor}x: paths disagree: {sorted(counts)}")
+        if factor == 100 and cc_path != "distributed":
+            raise RuntimeError("100x must take the distributed path")
 
 
 def probe_ivfpq(spark) -> None:
