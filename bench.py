@@ -1,160 +1,47 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Headline timer: the headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Each query runs best-of-3 after a warmup query primes the JVM and the
+file listing; timing includes plan + execution (count), which is what
+a user experiences. Next to each query's best wall it records the
+process-tree CPU seconds of that same run (the driver JVM with its
+local executors and Python workers, plus this process), which host
+steal inflates far less than wall time.
+
 Prints ONE JSON line:
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+  {"metric": "...", "value": <total wall sec>, "unit": "sec", "sf": <sf>,
+   "queries": {name: sec, ...}, "cpu_s": <total cpu sec>,
+   "detail_file": "BENCH_DETAIL.json"}
+
+and rewrites BENCH_DETAIL.json with the full record (per-query wall,
+CPU and spread, the DuckDB yardstick, LSH bucket skew). This is a
+timer, not a regression gate: regressions are judged by paired
+``perfbench/run.py`` runs of the parent and the change.
 
 Headline set: one representative of each heavy plan family — star-join
 agg (flagship), full-scan agg (TPC-H Q1 shape), multi-CTE join, window
 top-N, sessionization (two window passes + agg), correlated scalar
-subquery, MinHash-LSH dedup, brute-force ANN. Each query runs once
-after a warmup query primes the JVM/file listing; timing includes plan
-+ execution (collect), which is what a user experiences.
+subquery, MinHash-LSH dedup, brute-force ANN and the pipeline families
+added since.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import math
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: directory holding BENCH_r*/BENCH_DETAIL_r* files. A module global
-#: (not inlined dirname(__file__) at each site) so the contract tests
-#: can point the loaders at a tmpdir of synthetic fixtures instead of
-#: asserting live repo state (VERDICT r09 item 1 / ADVICE r09).
+from perfbench.procstat import self_cpu_s, tree_cpu_s
+
+#: directory that receives BENCH_DETAIL.json (tools/capture_plans.py
+#: writes its plans/ tree under it too)
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 
-#: per-query slowdown vs the previous round that triggers a loud
-#: regression flag (judge round-3 item 3)
-REGRESSION_RATIO = 1.25
-#: queries faster than this are pure overhead noise — exempt (judge
-#: round-4 item 1: sub-half-second timings on this box are inside
-#: JVM/suite noise; raised 0.3 -> 0.5)
-REGRESSION_MIN_SEC = 0.5
-
-
-def _read_round(path: str) -> tuple[dict[str, float], float | None, dict]:
-    """(queries, control median, full parsed body) of one BENCH file."""
-    with open(path) as f:
-        data = json.load(f)
-    body = data.get("parsed") or data
-    q = body.get("queries") or {}
-    return dict(q), body.get("control_median_sec"), body
-
-
-def round_bodies() -> dict[int, dict]:
-    """Best available full body per round, keyed by round number.
-
-    The driver captures only the last ~2000 chars of bench stdout, so
-    from round 9 on the full detail lives in a COMMITTED
-    ``BENCH_DETAIL_r{N}.json`` (VERDICT r08 item 1 — the old
-    single-fat-line scheme left BENCH_r07/r08 with ``parsed: null``
-    and silently anchored every vs-prev comparison to round 6). The
-    detail file wins over the driver's BENCH_r{N}.json when both
-    parse; driver files remain the only source for rounds ≤ 8."""
-    here = BENCH_DIR
-    bodies: dict[int, dict] = {}
-    for pattern, rx in (
-        ("BENCH_r*.json", r"BENCH_r(\d+)\.json$"),
-        ("BENCH_DETAIL_r*.json", r"BENCH_DETAIL_r(\d+)\.json$"),
-    ):
-        for path in glob.glob(os.path.join(here, pattern)):
-            m = re.search(rx, path)
-            if not m:
-                continue
-            try:
-                q, _, body = _read_round(path)
-            except (OSError, json.JSONDecodeError, AttributeError):
-                continue
-            if q:
-                bodies[int(m.group(1))] = body  # detail glob runs last
-    return bodies
-
-
-def this_round() -> int:
-    """Round being built = latest driver-written BENCH_r{N}.json + 1.
-
-    Only the driver's own files count (it writes exactly one per
-    completed round); our BENCH_DETAIL files must NOT feed this or a
-    second in-round bench run would bump the round number."""
-    rounds = [
-        int(m.group(1))
-        for path in glob.glob(os.path.join(BENCH_DIR, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", path))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-def load_prev_round() -> tuple[
-    int | None, dict[str, float], float | None, float | None
-]:
-    """Latest COMPLETED round with usable per-query timings: (round
-    number, per-query seconds, throughput-control median, micro-control
-    median — the probes' A/B references; either may be None when that
-    round didn't record it). The in-flight round's own detail file
-    (written by earlier bench runs this session) is excluded so "vs
-    prev" never degenerates into self-comparison."""
-    cur = this_round()
-    bodies = {n: b for n, b in round_bodies().items() if n < cur}
-    if not bodies:
-        return None, {}, None, None
-    n = max(bodies)
-    body = bodies[n]
-    return (
-        n,
-        dict(body.get("queries") or {}),
-        body.get("control_median_sec"),
-        body.get("control_micro_median_sec"),
-    )
-
-
-#: short queries to probe regardless of current timings. The round-9
-#: judge's raw-flag set (op_interval_overlap, pl_lm_surprisal,
-#: pl_shard_manifest, op_snapshot_diff, pl_dsir_weights) probed clean
-#: in both r9 and r10 (all six verdicts "drift", micro-normalized
-#: ratios 0.59-0.81 vs a 1.15 bar), so it was retired in r11 per its
-#: own two-clean-rounds rule (VERDICT r10 item 6). Re-add names here
-#: if a future cold-box run raw-flags them again.
-#:
-#: op_interval_overlap re-entered via the r11 recurring flag, probed
-#: clean in r12 (ratio_norm 0.579) and r13 (ratio_norm 0.721, median
-#: 0.404s — BENCH_DETAIL_r13.json), and was retired in r14 per the
-#: two-clean-rounds rule, exactly as the r9 set was removed in r11
-#: (VERDICT r13 item 7).
-EXTRA_WATCHLIST: set[str] = set()
-
-
-def probe_watchlist(prev_n: int | None) -> set[str]:
-    """Queries whose PREVIOUS round already looked slow — recorded
-    regressions plus anything whose r{N} time exceeded its r{N-1} time
-    by the flag ratio even below the loud-flag floor (the
-    'unflagged-by-threshold-quirk' shape). These get probed this round
-    regardless of current timings, so last round's drift adjudication
-    is re-checked by the A/B protocol instead of standing as prose."""
-    if prev_n is None:
-        return set()
-    bodies = round_bodies()
-    prev_body = bodies.get(prev_n)
-    if prev_body is None:
-        return set()
-    prev_q = dict(prev_body.get("queries") or {})
-    watch = set(prev_body.get("regressions") or {})
-    pp_body = bodies.get(prev_n - 1)
-    if pp_body is None:
-        return watch
-    pp_q = dict(pp_body.get("queries") or {})
-    for name, t in prev_q.items():
-        p = pp_q.get(name)
-        if p and t / p > REGRESSION_RATIO:
-            watch.add(name)
-    return watch
+DETAIL_FILE = "BENCH_DETAIL.json"
 
 HEADLINE = [
     "flagship_top_customers",
@@ -233,15 +120,6 @@ HEADLINE = [
 #: scale prediction.
 DUCK_YARDSTICK = 10
 
-#: the round-8 throughput-control recording — the same round the
-#: per-query baseline records in BASELINE.md were pinned. The DuckDB
-#: yardstick geomean drifted 4.83 -> 7.15 across r8-r12 purely with
-#: box state (VERDICT r12 item 7); ``yardstick_norm`` = geomean x
-#: (CONTROL_REF_SEC / this run's control median) rescales the geomean
-#: to r8-box conditions so an ALGORITHMIC ratio jump (a plan that got
-#: worse) is machine-separable from box drift without per-round prose.
-CONTROL_REF_SEC = 0.997
-
 
 def bucket_skew_stats(spark, sf_dir: str) -> dict[str, dict]:
     """Max bucket size seen BEFORE the viral-bucket cap for both capped
@@ -289,6 +167,49 @@ def duckdb_yardstick(registry, sf_dir: str) -> dict[str, float]:
     return out
 
 
+def jvm_pid(spark) -> int:
+    return int(spark._jvm.java.lang.ProcessHandle.current().pid())
+
+
+def time_best_of_3(run, pid: int) -> tuple[float, float, float, int]:
+    """(best wall, CPU of that same run, max/min wall spread, rows) over
+    three calls of ``run()``, which returns a row count. CPU is the
+    process-tree CPU of JVM ``pid`` plus this process, read outside the
+    wall window. Best-of-3 because same-session runs of one query vary
+    up to 2x on this kind of shared host; the spread keeps that
+    visible."""
+    runs = []
+    for _ in range(3):
+        cpu0 = tree_cpu_s(pid) + self_cpu_s()
+        t0 = time.perf_counter()
+        rows = run()
+        wall = time.perf_counter() - t0
+        runs.append((wall, tree_cpu_s(pid) + self_cpu_s() - cpu0))
+    wall, cpu = min(runs)
+    return wall, cpu, max(w for w, _ in runs) / wall, rows
+
+
+def headline_detail(
+    walls: dict[str, float],
+    cpus: dict[str, float],
+    spreads: dict[str, float],
+    sf: float,
+) -> dict:
+    """The detail record's timing part; ``value`` is the sum of the
+    recorded (rounded) per-query walls, so the two always agree."""
+    queries = {n: round(t, 3) for n, t in walls.items()}
+    return {
+        "metric": "headline_suite_wall_clock",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "sf": sf,
+        "queries": queries,
+        "cpu_s": round(sum(cpus.values()), 3),
+        "queries_cpu_s": {n: round(c, 3) for n, c in cpus.items()},
+        "spread": {n: round(s, 2) for n, s in spreads.items()},
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -298,223 +219,83 @@ def main() -> None:
 
     registry = load_all()
     spark = get_spark("keenwa_spark_bench")
+    pid = jvm_pid(spark)
 
     # warmup: prime file listing + codegen paths (not timed)
     registry["get_scan"].fn(spark, sf_dir).count()
 
-    timings: dict[str, float] = {}
+    walls: dict[str, float] = {}
+    cpus: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    total = 0.0
     for name in HEADLINE:
         fn = registry[name].fn
-        # best-of-3 (judge round-4 item 1): this box has high
-        # run-to-run variance (GC, cache, contention) — observed up to
-        # 2x on the same query minutes apart; min of three same-session
-        # runs is the stable cross-round comparator. The spread
-        # (max/min) is recorded so noisy queries are visible.
-        times, n = [], 0
-        for _ in range(3):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            times.append(time.time() - t0)
-        best = min(times)
-        spreads[name] = round(max(times) / best, 2)
-        timings[name] = round(best, 3)
-        total += best
+        walls[name], cpus[name], spreads[name], n = time_best_of_3(
+            lambda: fn(spark, sf_dir).count(), pid
+        )
         print(
-            f"# {name}: {best:.2f}s ({n} rows, spread {spreads[name]:.2f}x)",
+            f"# {name}: {walls[name]:.2f}s wall, {cpus[name]:.2f}s cpu"
+            f" ({n} rows, spread {spreads[name]:.2f}x)",
             file=sys.stderr,
         )
-
-    # regression gate: diff against the previous round's recorded bench
-    # and flag >REGRESSION_RATIO slowdowns loudly (perf losses must be
-    # caught before snapshot, not by the judge)
-    prev_n, prev_q, prev_control, prev_micro = load_prev_round()
-    regressions: dict[str, float] = {}
-    probe_set: set[str] = set()
-    common_now = common_prev = 0.0
-    for name, t in timings.items():
-        p = prev_q.get(name)
-        if not p:
-            continue
-        common_now += t
-        common_prev += p
-        if t / p > REGRESSION_RATIO:
-            # every over-ratio query gets an A/B probe, even the
-            # sub-floor ones the loud flag exempts as noise
-            probe_set.add(name)
-        if t > REGRESSION_MIN_SEC and t / p > REGRESSION_RATIO:
-            regressions[name] = round(t / p, 2)
-            print(
-                f"!! REGRESSION {name}: {t:.2f}s vs r{prev_n} {p:.2f}s"
-                f" ({t / p:.2f}x)",
-                file=sys.stderr,
-            )
-    vs_prev = round(common_now / common_prev, 3) if common_prev else None
-
-    # self-adjudicating probe (VERDICT r06 item 1): interleaved A/B
-    # runs against the pinned control for every flagged query, plus
-    # last round's watchlist, so drift vs regression needs no prose
-    from tools.perf_probe import (
-        probe,
-        session_control_median,
-        session_micro_median,
-    )
-
-    probe_set |= (probe_watchlist(prev_n) | EXTRA_WATCHLIST) & set(registry)
-    probes: dict[str, dict] = {}
-    for name in sorted(probe_set):
-        fn = registry[name].fn
-        probes[name] = probe(
-            spark,
-            lambda: fn(spark, sf_dir).count(),
-            prev_q.get(name),
-            prev_control,
-            micro_ref=prev_micro,
-        )
-        print(f"# probe {name}: {json.dumps(probes[name])}", file=sys.stderr)
-    control_med = session_control_median(spark)
-    # per-job-overhead control (recorded so the NEXT round's probes
-    # get the micro A/B ref — the axis the r9 drift analysis showed
-    # the throughput control misses on short queries)
-    control_micro = session_micro_median(spark)
+    detail = headline_detail(walls, cpus, spreads, sf)
 
     # absolute yardstick: DuckDB wall-clock of the same oracle SQL on
     # the same box/files for the TPC-H-shape rows (context, not a gate)
     duck = duckdb_yardstick(registry, sf_dir)
-    ratios = {n: round(timings[n] / d, 2) for n, d in duck.items() if d > 0}
+    ratios = {
+        n: round(detail["queries"][n] / d, 2) for n, d in duck.items() if d > 0
+    }
     geo = round(
         math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios)), 2
     ) if ratios else None
-    # control-normalized yardstick (VERDICT r12 item 7): geomean
-    # rescaled to r8-box conditions via the pinned control reference
-    ynorm = (
-        round(geo * CONTROL_REF_SEC / control_med, 2)
-        if geo and control_med else None
-    )
     print(
         f"# duckdb yardstick (spark/duck, sf={sf}): geomean {geo}x "
-        f"(norm {ynorm}x) "
         + " ".join(f"{n}={r}x" for n, r in ratios.items()),
         file=sys.stderr,
     )
-
-    # Full detail goes to a COMMITTED file; stdout gets ONE compact
-    # line sized for the driver's ~2000-char capture (VERDICT r08
-    # item 1 — BENCH_r07/r08 both landed with ``parsed: null`` because
-    # the fat line outgrew the capture, silently anchoring every
-    # vs-prev comparison to round 6).
-    rnd = this_round()
-    # bucket-skew headroom for the capped LSH/band families (r14,
-    # VERDICT r13 item 8): max bucket size seen BEFORE each family's
-    # viral-bucket cap, over the same inputs the suite just ran —
-    # reporting-only, computed OUTSIDE the timed region. (An
-    # Observation riding the operators' own agg jobs was prototyped
-    # first, but AQE drops CollectMetrics accumulators from non-final
-    # query stages — observedMetrics came back empty; recomputing the
-    # tiny stats row untimed is the honest fallback.)
-    skew = bucket_skew_stats(spark, sf_dir)
-    print(f"# lsh bucket skew: {json.dumps(skew)}", file=sys.stderr)
-
-    detail = {
-        "metric": "headline_suite_wall_clock",
-        "value": round(total, 3),
-        "unit": "sec",
-        "round": rnd,
-        "queries": timings,
-        "spread": spreads,
-        "skew": skew,
-        "sf": sf,
-        "prev_round": prev_n,
-        "vs_prev_common_ratio": vs_prev,
-        "regressions": regressions,
-        "control_median_sec": control_med,
-        "control_micro_median_sec": control_micro,
-        "probe": probes,
-        "duckdb": {
-            "queries_sec": duck,
-            "spark_over_duck": ratios,
-            "geomean_ratio": geo,
-            "yardstick_norm": ynorm,
-            "control_ref_sec": CONTROL_REF_SEC,
-        },
+    detail["duckdb"] = {
+        "queries_sec": duck,
+        "spark_over_duck": ratios,
+        "geomean_ratio": geo,
     }
-    detail_path = os.path.join(BENCH_DIR, f"BENCH_DETAIL_r{rnd:02d}.json")
+
+    # bucket-skew headroom for the capped LSH/band families, computed
+    # OUTSIDE the timed region. (An Observation riding the operators'
+    # own agg jobs was prototyped first, but AQE drops CollectMetrics
+    # accumulators from non-final query stages — observedMetrics came
+    # back empty; recomputing the tiny stats row untimed is the honest
+    # fallback.)
+    detail["skew"] = bucket_skew_stats(spark, sf_dir)
+    print(f"# lsh bucket skew: {json.dumps(detail['skew'])}", file=sys.stderr)
+
+    detail_path = os.path.join(BENCH_DIR, DETAIL_FILE)
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
         f.write("\n")
     print(f"# full detail -> {detail_path}", file=sys.stderr)
 
-    print(compact_line(detail, os.path.basename(detail_path)))
+    print(compact_line(detail))
 
 
-#: the driver keeps only the tail of bench stdout; stay safely inside
+#: the bench stdout is captured only up to its last ~2000 chars; the
+#: line must stay inside (tests/test_bench_contract.py pins it)
 CAPTURE_BUDGET = 1800
 
 
-def compact_line(detail: dict, detail_file: str) -> str:
-    """The ONE stdout JSON line, built from the detail body and
-    guaranteed <= CAPTURE_BUDGET chars: progressive shrink drops the
-    bulkiest context first — everything dropped still lives in the
-    committed detail file (unit-tested in tests/test_bench_contract.py
-    so a growing headline list can never push the line back past the
-    driver's capture, the failure that blanked BENCH_r07/r08)."""
-    compact = {
-        "metric": detail["metric"],
-        "value": detail["value"],
-        "unit": detail["unit"],
-        "queries": {n: round(t, 2) for n, t in detail["queries"].items()},
-        "sf": detail["sf"],
-        "prev_round": detail["prev_round"],
-        "vs_prev_common_ratio": detail["vs_prev_common_ratio"],
-        "regressions": detail["regressions"],
-        "probe_verdicts": {
-            n: p.get("verdict", "n/a") for n, p in detail["probe"].items()
-        },
-        "control_median_sec": detail["control_median_sec"],
-        "duckdb_geomean_ratio": detail["duckdb"]["geomean_ratio"],
-        "detail_file": detail_file,
-    }
-    # progressive shrink: each drop removes context that still lives
-    # in the detail file
-    line = json.dumps(compact)
-    for drop in ("probe_verdicts", "regressions"):
-        if len(line) <= CAPTURE_BUDGET:
-            break
-        compact.pop(drop, None)
-        line = json.dumps(compact)
-    # the queries map degrades gracefully: keep the SLOWEST half (the
-    # rows a reviewer needs first) rather than dropping the whole map
-    # — a growing headline list thins the driver line instead of
-    # blanking it (the full map always lives in the detail file)
-    while len(line) > CAPTURE_BUDGET and len(compact.get("queries", ())) > 8:
-        qs = sorted(
-            compact["queries"].items(), key=lambda kv: (-kv[1], kv[0])
-        )[: max(8, len(compact["queries"]) // 2)]
-        compact["queries"] = dict(qs)
-        compact["queries_shown"] = len(qs)
-        line = json.dumps(compact)
-    if len(line) > CAPTURE_BUDGET:
-        compact.pop("queries", None)
-        compact.pop("queries_shown", None)
-        line = json.dumps(compact)
-    # terminal guarantee (ADVICE r09): if even the core exceeds the
-    # budget, emit the minimal parseable record rather than an
-    # oversized line the driver would truncate back to parsed:null —
-    # the exact failure this function exists to prevent.
-    if len(line) > CAPTURE_BUDGET:
-        line = json.dumps(
-            {
-                "metric": detail["metric"],
-                "value": detail["value"],
-                "unit": detail["unit"],
-                "sf": detail["sf"],
-                "detail_file": detail_file,
-            }
-        )
-    assert len(line) <= CAPTURE_BUDGET, "compact_line core overflow"
-    return line
+def compact_line(detail: dict) -> str:
+    """The ONE stdout JSON line: totals plus per-query walls to 10 ms;
+    everything else lives in the detail file."""
+    return json.dumps(
+        {
+            "metric": detail["metric"],
+            "value": detail["value"],
+            "unit": detail["unit"],
+            "sf": detail["sf"],
+            "queries": {n: round(t, 2) for n, t in detail["queries"].items()},
+            "cpu_s": detail["cpu_s"],
+            "detail_file": DETAIL_FILE,
+        }
+    )
 
 
 if __name__ == "__main__":

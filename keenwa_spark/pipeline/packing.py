@@ -182,18 +182,9 @@ def chunk_and_pack(
     sequence), ``n_chunk_tokens``. In-shard packing order is
     (``id_col``, ``chunk_id``) — deterministic.
 
-    Perf note (round-9 adjudication of the r7-r9 bench creep vs the
-    round-6 anchor, 0.27s -> ~0.4s at sf0.1): this function is
-    byte-identical since round 6 (git) and the plan is already minimal
-    (ONE doc-level Exchange, integer-only arithmetic). Measured
-    decomposition at sf0.1 (5k docs): >= 60% of wall is the fixed
-    3-stage overhead (scan+explode / shuffle / window), and the
-    same-session best-of-3 spread (1.4-1.7x) exceeds the flagged
-    delta; the r6 anchor also predates a testdata regeneration, which
-    the synthetic probe control cannot normalize for text tables.
-    From round 9 the anchor is BENCH_DETAIL_r08.json — re-measured on
-    the current data in the same session — so the confound is gone
-    going forward."""
+    Perf note: the plan is already minimal (ONE doc-level Exchange,
+    integer-only arithmetic). At sf0.1 (5k docs) >= 60% of wall is the
+    fixed 3-stage overhead (scan+explode / shuffle / window)."""
     if not 0 <= overlap < chunk_tokens:
         raise ValueError(f"need 0 <= overlap < chunk_tokens, got {overlap}, {chunk_tokens}")
     if seq_len <= 0 or n_shards <= 0:

@@ -1,7 +1,6 @@
-"""The bench stdout contract (VERDICT r08 item 1): the driver captures
-only the last ~2000 chars of bench stdout, and rounds 7-8 shipped with
-``parsed: null`` because the single fat JSON line outgrew it. These
-tests pin the fix — no Spark needed."""
+"""The bench.py contract: one stdout JSON line that fits the
+CAPTURE_BUDGET capture window, and a timing helper that records wall
+and process-tree CPU for the same best run."""
 
 from __future__ import annotations
 
@@ -10,174 +9,46 @@ import json
 import bench
 
 
-def _detail(n_queries: int, n_probes: int) -> dict:
-    qs = {f"pl_some_quite_long_query_name_{i:03d}": 0.123 + i for i in range(n_queries)}
-    return {
-        "metric": "headline_suite_wall_clock",
-        "value": 19.741,
-        "unit": "sec",
-        "round": 9,
-        "queries": qs,
-        "spread": {n: 1.42 for n in qs},
-        "sf": 0.1,
-        "prev_round": 8,
-        "vs_prev_common_ratio": 1.216,
-        "regressions": {n: 1.62 for n in list(qs)[: n_queries // 4]},
-        "control_median_sec": 0.997,
-        "probe": {
-            n: {"min_sec": 0.5, "verdict": "drift"}
-            for n in list(qs)[:n_probes]
-        },
-        "duckdb": {
-            "queries_sec": {n: 0.05 for n in list(qs)[:10]},
-            "spark_over_duck": {n: 8.1 for n in list(qs)[:10]},
-            "geomean_ratio": 4.83,
-        },
+def test_line_fits_capture_at_worst_case_figures():
+    """The real headline names with 999.999 s wall and CPU per query
+    and a 3-digit sf still give a parseable line inside the budget,
+    carrying every query and none of the retired cross-round keys."""
+    walls = {n: 999.999 for n in bench.HEADLINE}
+    detail = bench.headline_detail(
+        walls, dict(walls), {n: 1.0 for n in walls}, 100.0
+    )
+    line = bench.compact_line(detail)
+    assert len(line) <= bench.CAPTURE_BUDGET
+    body = json.loads(line)
+    assert set(body) == {
+        "metric", "value", "unit", "sf", "queries", "cpu_s", "detail_file"
     }
+    assert list(body["queries"]) == bench.HEADLINE
+    assert body["sf"] == 100.0
+    assert body["detail_file"] == "BENCH_DETAIL.json"
+    retired = ("prev_round", "regressions", "probe", "control")
+    assert not [k for k in body if k.startswith(retired)]
 
 
-def test_compact_line_fits_capture_at_todays_headline_size():
-    d = _detail(len(bench.HEADLINE), 17)
-    line = bench.compact_line(d, "BENCH_DETAIL_r09.json")
-    assert len(line) <= bench.CAPTURE_BUDGET
-    body = json.loads(line)
-    assert body["prev_round"] == 8
-    assert body["detail_file"] == "BENCH_DETAIL_r09.json"
-    # the queries map survives (possibly thinned to the slowest
-    # subset under the synthetic extra-long names); the full map is
-    # in the detail file
-    assert len(body["queries"]) >= min(len(bench.HEADLINE), 8)
-    if "queries_shown" in body:
-        # thinned: the kept rows are the slowest ones
-        kept = set(body["queries"])
-        dropped_max = max(
-            v for n, v in d["queries"].items() if n not in kept
-        )
-        assert min(body["queries"].values()) >= dropped_max
+def test_time_best_of_3_records_wall_and_cpu(views):
+    """One tiny headline query through the timing helper: wall and CPU
+    are both measured, and the detail's value is the sum of the
+    per-query walls it records."""
+    from conftest import SF_DIR
+    from keenwa_spark.queries import load_all
 
-
-def test_compact_line_keeps_full_queries_at_realistic_names():
-    """With the REAL headline names (shorter than the synthetic canary
-    names) the full per-query map must still fit untruncated."""
-    d = _detail(len(bench.HEADLINE), 17)
-    d["queries"] = {n: 1.234 for n in bench.HEADLINE}
-    d["spread"] = {n: 1.42 for n in bench.HEADLINE}
-    d["regressions"] = {}
-    d["probe"] = {n: {"min_sec": 0.5, "verdict": "ok"} for n in bench.HEADLINE[:17]}
-    line = bench.compact_line(d, "BENCH_DETAIL_r10.json")
-    assert len(line) <= bench.CAPTURE_BUDGET
-    body = json.loads(line)
-    assert len(body["queries"]) == len(bench.HEADLINE)
-    assert "queries_shown" not in body
-
-
-def test_compact_line_survives_pathological_growth():
-    """Even at 3x the current headline count with every query flagged
-    and probed, the line still parses and fits — the shrink drops the
-    bulk blocks (which live in the detail file) rather than overflow."""
-    d = _detail(3 * len(bench.HEADLINE), 3 * len(bench.HEADLINE))
-    line = bench.compact_line(d, "BENCH_DETAIL_r99.json")
-    assert len(line) <= bench.CAPTURE_BUDGET
-    body = json.loads(line)
-    # the non-droppable core always survives
-    for key in ("value", "prev_round", "vs_prev_common_ratio",
-                "control_median_sec", "detail_file"):
-        assert key in body
-
-
-def _write(d, name: str, body) -> None:
-    (d / name).write_text(json.dumps(body))
-
-
-def test_prev_round_prefers_detail_and_excludes_inflight(tmp_path, monkeypatch):
-    """load_prev_round must resolve to the latest COMPLETED round with
-    usable queries — the detail file wins over a parsed:null driver
-    file for the same round, and this round's own in-flight detail
-    file never feeds the comparison. Hermetic: a synthetic
-    BENCH_r*/BENCH_DETAIL_r* file set under tmp_path (VERDICT r09
-    item 1 — the old version asserted live repo state and broke the
-    moment the driver wrote the next BENCH file)."""
-    monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    q = {f"q{i}": 1.0 + i for i in range(31)}
-    # round 6: driver file with inline parsed queries (pre-detail era)
-    _write(tmp_path, "BENCH_r06.json", {"parsed": {"queries": {"old": 9.9}}})
-    # round 7: the blanked-capture shape — parsed: null, no detail
-    _write(tmp_path, "BENCH_r07.json", {"parsed": None})
-    # round 8: driver file parsed:null BUT a committed detail file,
-    # with both controls recorded
-    _write(tmp_path, "BENCH_r08.json", {"parsed": None})
-    _write(
-        tmp_path,
-        "BENCH_DETAIL_r08.json",
-        {
-            "queries": q,
-            "control_median_sec": 0.95,
-            "control_micro_median_sec": 0.61,
-        },
+    fn = load_all()["q6_forecast_revenue"].fn
+    wall, cpu, spread, rows = bench.time_best_of_3(
+        lambda: fn(views, SF_DIR).count(), bench.jvm_pid(views)
     )
-    # driver has written r08 -> the in-flight round is 9
-    assert bench.this_round() == 9
-    # an in-flight detail file for round 9 (earlier bench run this
-    # session) must NOT become "prev"
-    _write(tmp_path, "BENCH_DETAIL_r09.json", {"queries": {"self": 1.0}})
+    assert wall > 0
+    assert cpu > 0
+    assert spread >= 1.0
+    assert rows == 1
 
-    n, prev_q, c, micro = bench.load_prev_round()
-    assert n == bench.this_round() - 1 == 8
-    assert prev_q == q
-    assert c == 0.95
-    assert micro == 0.61
-
-
-def test_prev_round_skips_unparseable_rounds(tmp_path, monkeypatch):
-    """A parsed:null driver file with no detail file is not a usable
-    round — prev must fall back to the latest round with queries."""
-    monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    _write(
-        tmp_path,
-        "BENCH_r06.json",
-        {"parsed": {"queries": {"a": 1.0}, "control_median_sec": 0.9}},
+    walls = {"q6_forecast_revenue": wall, "other": 0.1234}
+    detail = bench.headline_detail(
+        walls, {n: cpu for n in walls}, {n: spread for n in walls}, 0.001
     )
-    _write(tmp_path, "BENCH_r07.json", {"parsed": None})
-    assert bench.this_round() == 8
-    n, prev_q, c, micro = bench.load_prev_round()
-    assert n == 6
-    assert prev_q == {"a": 1.0}
-    assert c == 0.9
-    # round 6 predates the micro control — absent, not an error
-    assert micro is None
-
-
-def test_prev_round_empty_dir(tmp_path, monkeypatch):
-    monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    assert bench.this_round() == 1
-    assert bench.load_prev_round() == (None, {}, None, None)
-
-
-def test_live_repo_invariants():
-    """The only live-state assertions we keep are relations that hold
-    by construction in ANY repo state: prev (if any) is a completed
-    round strictly before this one, with self-consistent contents."""
-    n, q, c, _micro = bench.load_prev_round()
-    if n is None:
-        return
-    assert n < bench.this_round()
-    assert q, "a usable prev round must carry per-query timings"
-
-
-def test_micro_control_window_is_partitioned_and_bounded(spark):
-    """VERDICT r13 item 4: the bench stderr's 'WindowExec: No Partition
-    Defined' WARNs came from the probe micro control's old
-    ``partitionBy(lit(1))`` — a foldable key the optimizer erases,
-    leaving an empty partition spec (the r14 runtime scan showed ZERO
-    headline queries emit the warning). Pins both halves of the fix:
-    the executed plan carries a real (non-folded) partition spec, and
-    the window input is bounded at 7 rows by construction, so the
-    single partition is safe at any scale."""
-    from keenwa_spark.plans import executed_plan_text, partitionless_windows
-    from tools.perf_probe import _micro_frame
-
-    df = _micro_frame(spark)
-    assert df.count() == 7  # groupBy(id % 7): bounded window input
-    plan = executed_plan_text(df)
-    assert "Window" in plan  # the shape still exercises a window job
-    assert partitionless_windows(plan) == []
+    assert detail["value"] == round(sum(detail["queries"].values()), 3)
+    assert detail["cpu_s"] == round(sum(detail["queries_cpu_s"].values()), 3)
