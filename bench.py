@@ -6,7 +6,8 @@ file listing; timing includes plan + execution (count), which is what
 a user experiences. Next to each query's best wall it records the
 process-tree CPU seconds of that same run (the driver JVM with its
 local executors and Python workers, plus this process), which host
-steal inflates far less than wall time.
+steal inflates far less than wall time, and the classes Janino
+compiled over the three runs.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total wall sec>, "unit": "sec", "sf": <sf>,
@@ -14,9 +15,9 @@ Prints ONE JSON line:
    "detail_file": "BENCH_DETAIL.json"}
 
 and rewrites BENCH_DETAIL.json with the full record (per-query wall,
-CPU and spread, the DuckDB yardstick, LSH bucket skew). This is a
-timer, not a regression gate: regressions are judged by paired
-``perfbench/run.py`` runs of the parent and the change.
+CPU, spread and codegen compiles, the DuckDB yardstick, LSH bucket
+skew). This is a timer, not a regression gate: regressions are judged
+by paired ``perfbench/run.py`` runs of the parent and the change.
 
 Headline set: one representative of each heavy plan family — star-join
 agg (flagship), full-scan agg (TPC-H Q1 shape), multi-CTE join, window
@@ -171,13 +172,19 @@ def jvm_pid(spark) -> int:
     return int(spark._jvm.java.lang.ProcessHandle.current().pid())
 
 
-def time_best_of_3(run, pid: int) -> tuple[float, float, float, int]:
-    """(best wall, CPU of that same run, max/min wall spread, rows) over
-    three calls of ``run()``, which returns a row count. CPU is the
-    process-tree CPU of JVM ``pid`` plus this process, read outside the
-    wall window. Best-of-3 because same-session runs of one query vary
-    up to 2x on this kind of shared host; the spread keeps that
-    visible."""
+def time_best_of_3(run, spark) -> tuple[float, float, float, int, int]:
+    """(best wall, CPU of that same run, max/min wall spread, rows,
+    classes compiled) over three calls of ``run()``, which returns a row
+    count. CPU is the process-tree CPU of ``spark``'s JVM plus this
+    process, read outside the wall window. Best-of-3 because
+    same-session runs of one query vary up to 2x on this kind of shared
+    host; the spread keeps that visible. Compiles are summed over all
+    three runs: a nonzero count on a warm query means the codegen cache
+    is evicting its classes."""
+    from keenwa_spark.session import codegen_stats
+
+    pid = jvm_pid(spark)
+    compiles0, _ = codegen_stats(spark)
     runs = []
     for _ in range(3):
         cpu0 = tree_cpu_s(pid) + self_cpu_s()
@@ -185,14 +192,16 @@ def time_best_of_3(run, pid: int) -> tuple[float, float, float, int]:
         rows = run()
         wall = time.perf_counter() - t0
         runs.append((wall, tree_cpu_s(pid) + self_cpu_s() - cpu0))
+    compiles = codegen_stats(spark)[0] - compiles0
     wall, cpu = min(runs)
-    return wall, cpu, max(w for w, _ in runs) / wall, rows
+    return wall, cpu, max(w for w, _ in runs) / wall, rows, compiles
 
 
 def headline_detail(
     walls: dict[str, float],
     cpus: dict[str, float],
     spreads: dict[str, float],
+    compiles: dict[str, int],
     sf: float,
 ) -> dict:
     """The detail record's timing part; ``value`` is the sum of the
@@ -207,6 +216,7 @@ def headline_detail(
         "cpu_s": round(sum(cpus.values()), 3),
         "queries_cpu_s": {n: round(c, 3) for n, c in cpus.items()},
         "spread": {n: round(s, 2) for n, s in spreads.items()},
+        "queries_codegen_compiles": dict(compiles),
     }
 
 
@@ -219,7 +229,6 @@ def main() -> None:
 
     registry = load_all()
     spark = get_spark("keenwa_spark_bench")
-    pid = jvm_pid(spark)
 
     # warmup: prime file listing + codegen paths (not timed)
     registry["get_scan"].fn(spark, sf_dir).count()
@@ -227,17 +236,19 @@ def main() -> None:
     walls: dict[str, float] = {}
     cpus: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in HEADLINE:
         fn = registry[name].fn
-        walls[name], cpus[name], spreads[name], n = time_best_of_3(
-            lambda: fn(spark, sf_dir).count(), pid
+        walls[name], cpus[name], spreads[name], n, compiles[name] = (
+            time_best_of_3(lambda: fn(spark, sf_dir).count(), spark)
         )
         print(
             f"# {name}: {walls[name]:.2f}s wall, {cpus[name]:.2f}s cpu"
-            f" ({n} rows, spread {spreads[name]:.2f}x)",
+            f" ({n} rows, spread {spreads[name]:.2f}x,"
+            f" {compiles[name]} compiles)",
             file=sys.stderr,
         )
-    detail = headline_detail(walls, cpus, spreads, sf)
+    detail = headline_detail(walls, cpus, spreads, compiles, sf)
 
     # absolute yardstick: DuckDB wall-clock of the same oracle SQL on
     # the same box/files for the TPC-H-shape rows (context, not a gate)

@@ -24,10 +24,6 @@ class NotSupportedError(KeenwaSparkError):
     """
 
 
-class NotImplementedYetError(KeenwaSparkError):
-    """A construct on the roadmap but not yet implemented."""
-
-
 class ArgumentError(KeenwaSparkError):
     """Invalid argument to a builder method or function call.
 

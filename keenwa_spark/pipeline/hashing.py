@@ -49,9 +49,3 @@ def spark_hash64(expr: str) -> str:
 def duck_hash64(expr: str) -> str:
     """DuckDB SQL: identical md5-derived 32-bit int64."""
     return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
-
-
-def minhash_expr(hash_col: str, j: int) -> str:
-    """Shared-dialect SQL for MIN((a_j*h + b_j) mod P) over a group."""
-    a, b = MINHASH_AB[j]
-    return f"MIN(({a} * {hash_col} + {b}) % {MINHASH_P})"

@@ -41,17 +41,6 @@ REFERENCE_TYPE_MAP: dict[str, T.DataType] = {
 }
 
 
-def to_spark_type(name: str) -> T.DataType:
-    """Spark type for a reference type name (scalar families only)."""
-    try:
-        return REFERENCE_TYPE_MAP[name.lower()]
-    except KeyError:
-        raise KeyError(
-            f"unknown/parameterized reference type: {name!r} "
-            "(tuple/array are built per-instance)"
-        ) from None
-
-
 def time_of_day_expr(ts_col: str) -> str:
     """The TIME-type shim: seconds since midnight of a timestamp column
     (works identically in Spark and DuckDB — hour/minute/second are
