@@ -11,6 +11,13 @@ would consume via ANALYZE on persisted tables.
 Row counts come free from parquet footers (no data scan), the same
 "declared statistics" model keenwa uses — the catalog knows sizes
 without reading rows.
+
+Schemas come from the same footers (``sources.readers.read_parquet``
+/ ``parquet_schema``). Spark's own schema inference launches a Spark
+job per table just to read the footer the catalog has already opened
+on the driver, so registering the ten standard tables cost ten jobs,
+about half of a fresh session's set-up. Read from the footer,
+registration launches no Spark job.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from keenwa_spark.errors import ArgumentError
+from keenwa_spark.sources.readers import nanos_columns, read_parquet
 
 #: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md)
 STANDARD_TABLES = (
@@ -94,7 +102,6 @@ class Catalog:
         if os.path.isdir(path):
             # Spark-standard directory layout: sum the part files
             dataset = pq.ParquetDataset(path)
-            arrow_schema = dataset.schema
             row_count = sum(
                 frag.metadata.num_rows if frag.metadata else frag.count_rows()
                 for frag in dataset.fragments
@@ -106,32 +113,17 @@ class Catalog:
                 if f.endswith(".parquet")
             )
         else:
-            pf = pq.ParquetFile(path)
-            arrow_schema = pf.schema_arrow
-            row_count = pf.metadata.num_rows
+            row_count = pq.read_metadata(path).num_rows
             size_bytes = os.path.getsize(path)
-        df = self.spark.read.parquet(path)
+        df = read_parquet(self.spark, path)
         # parquet TIMESTAMP(NANOS) has no Spark type; the session reads it
         # as long (nanosAsLong) and the view converts to a micros timestamp
-        import pyarrow as pa
         from pyspark.sql import functions as F
 
-        from pyspark.sql.types import LongType
-
-        for field in arrow_schema:
-            if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
-                # the shim applies ONLY when Spark actually surfaced the
-                # column as a long (nanosAsLong on true TIMESTAMP(NANOS)
-                # files). INT96 files also report ns in the ARROW schema
-                # but Spark reads them as proper timestamps — shimming
-                # those raised a type error (caught by tools/scale_probe)
-                if isinstance(df.schema[field.name].dataType, LongType):
-                    df = df.withColumn(
-                        field.name,
-                        F.expr(
-                            f"timestamp_micros(CAST({field.name} DIV 1000 AS BIGINT))"
-                        ),
-                    )
+        for col in nanos_columns(path):
+            df = df.withColumn(
+                col, F.expr(f"timestamp_micros(CAST({col} DIV 1000 AS BIGINT))")
+            )
         df.createOrReplaceTempView(name)
         tdef = TableDef(
             name=name,

@@ -329,6 +329,11 @@ def ivf_search(
     )
 
 
+#: parquet layout of a saved quantizer; ``ivf_load`` reads with it, so
+#: loading needs no schema inference
+IVF_SCHEMA = "cid INT, cv ARRAY<DOUBLE>"
+
+
 def ivf_save(spark: SparkSession, cents: Cents, path: str) -> None:
     """Persist a trained quantizer as parquet — the reusable-index
     half of the IVF story: train once on a bounded sample, save, and
@@ -338,7 +343,7 @@ def ivf_save(spark: SparkSession, cents: Cents, path: str) -> None:
     bit-exactly, so loaded models assign identically (pinned in
     tests/test_pipeline_extras.py)."""
     spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], "cid INT, cv ARRAY<DOUBLE>"
+        [(cid, cv) for cid, cv in cents], IVF_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -347,5 +352,5 @@ def ivf_load(spark: SparkSession, path: str) -> Cents:
     model shape ``ivf_assign``/``ivf_search`` consume. The model is
     K x dim doubles — driver-bounded by construction (same budget as
     training's driver fit)."""
-    rows = spark.read.parquet(path).orderBy("cid").collect()
+    rows = spark.read.schema(IVF_SCHEMA).parquet(path).orderBy("cid").collect()
     return [(int(r["cid"]), list(r["cv"])) for r in rows]

@@ -821,6 +821,12 @@ def ivfpq_search(
     return _emit_topk(ranked, emb, queries, topk, refine, id_col, vec_col)
 
 
+#: parquet layouts of saved codebooks; the loaders read with them, so
+#: loading needs no schema inference
+PQ_SCHEMA = "sub INT, pos INT, cv ARRAY<DOUBLE>"
+LOPQ_SCHEMA = "cid INT, sub INT, pos INT, cv ARRAY<DOUBLE>"
+
+
 def pq_save(spark, books: Books, path: str) -> None:
     """Persist fitted codebooks as parquet — the reusable-index story
     of ivf_save, for the PQ half: fit once on a bounded sample, save,
@@ -833,16 +839,18 @@ def pq_save(spark, books: Books, path: str) -> None:
         for s, codes in enumerate(books)
         for pos, cv in codes
     ]
-    spark.createDataFrame(
-        rows, "sub INT, pos INT, cv ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    spark.createDataFrame(rows, PQ_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def pq_load(spark, path: str) -> Books:
     """Load codebooks saved by ``pq_save`` back into the driver-side
     ``Books`` shape. The model is Σ k_s · d doubles — driver-bounded
     by construction (same budget as training's driver fit)."""
-    rows = spark.read.parquet(path).orderBy("sub", "pos").collect()
+    rows = (
+        spark.read.schema(PQ_SCHEMA).parquet(path).orderBy("sub", "pos").collect()
+    )
     books: Books = []
     for r in rows:
         while len(books) <= r["sub"]:
@@ -862,16 +870,21 @@ def lopq_save(spark, lbooks: "dict[int, Books]", path: str) -> None:
         for s, codes in enumerate(bks)
         for pos, cv in codes
     ]
-    spark.createDataFrame(
-        rows, "cid INT, sub INT, pos INT, cv ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    spark.createDataFrame(rows, LOPQ_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def lopq_load(spark, path: str) -> "dict[int, Books]":
     """Load per-cell codebooks saved by ``lopq_save``; float64
     roundtrips parquet bit-exactly, so loaded books encode identically
     (same contract as pq_load, pinned in tests/test_recall.py)."""
-    rows = spark.read.parquet(path).orderBy("cid", "sub", "pos").collect()
+    rows = (
+        spark.read.schema(LOPQ_SCHEMA)
+        .parquet(path)
+        .orderBy("cid", "sub", "pos")
+        .collect()
+    )
     out: dict[int, Books] = {}
     for r in rows:
         bks = out.setdefault(int(r["cid"]), [])

@@ -342,6 +342,7 @@ def st_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from keenwa_spark.operators.rollup import finalize_rollup
     from keenwa_spark.session import session_scratch_dir
+    from keenwa_spark.sources.readers import read_parquet
     from keenwa_spark.streaming.rollup import rollup_refresh_stream
 
     # session-owned store dir (removed at interpreter exit, not here):
@@ -359,7 +360,7 @@ def st_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not query.awaitTermination(300):
         query.stop()
         raise TimeoutError("st_rollup_refresh stream did not drain in 300s")
-    final = finalize_rollup(spark.read.parquet(store), grain="day")
+    final = finalize_rollup(read_parquet(spark, store), grain="day")
     return final.select(
         "event_type",
         F.date_format("bucket_ts", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
@@ -551,6 +552,7 @@ def st_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from keenwa_spark.session import session_scratch_dir
+    from keenwa_spark.sources.readers import read_parquet
     from keenwa_spark.streaming.upsert import upsert_state_stream
 
     # session-owned store dir: the upsert state table is keyed by
@@ -567,7 +569,7 @@ def st_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.stop()
         raise TimeoutError("st_upsert_state stream did not drain in 300s")
     return (
-        spark.read.parquet(store)
+        read_parquet(spark, store)
         .select(
             "user_id", "n_events",
             F.col("total_value").cast("double").alias("total_value"),

@@ -10,7 +10,10 @@ engine needs, thin and declarative so Catalyst keeps pushdown/pruning.
 - ``write_parquet`` — partitioned, size-targeted writer (the 100 TB
   output shape: partition columns + target file size, never
   coalesce(1));
-- nanosecond-timestamp normalization shared with the Catalog.
+- ``parquet_schema`` / ``nanos_columns`` — one parquet footer read on
+  the driver: the schema Spark would infer without the Spark job its
+  inference runs, and the TIMESTAMP(NANOS) columns the Catalog and the
+  event stream convert.
 """
 
 from keenwa_spark.sources.readers import (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from keenwa_spark.pipeline.hashing import spark_hash64
+from keenwa_spark.sources.readers import read_parquet
 
 MANIFEST_NAME = "_manifest.json"
 
@@ -116,7 +117,7 @@ def verify_shards(spark: SparkSession, path: str) -> tuple[bool, list[str]]:
     got = {
         int(r["shard"]): (int(r["n_rows"]), int(r["checksum"]))
         for r in shard_manifest(
-            spark.read.parquet(path),
+            read_parquet(spark, path),
             manifest["key_col"],
             manifest["content_cols"],
             manifest["n_shards"],

@@ -14,6 +14,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from keenwa_spark.sources.readers import read_parquet
+
 #: target output file size — parquet sweet spot for scan parallelism
 TARGET_FILE_BYTES = 256 << 20
 
@@ -209,7 +211,7 @@ def compact_parquet(
     if files_before == 0:
         return 0, 0
     n_out = max(1, math.ceil(sum(before.values()) / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tmp, old = f"{path}.tmp-compact", f"{path}.old"
     df.repartition(n_out).write.mode("overwrite").parquet(tmp)
     if _listing() != before:

@@ -9,6 +9,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from keenwa_spark.sources.readers import nanos_columns
+
 #: events schema when ts is parquet TIMESTAMP(NANOS) (driver testdata):
 #: read as long under the session's nanosAsLong, converted below —
 #: same shim as the batch Catalog
@@ -24,34 +26,6 @@ EVENTS_SCHEMA_TS = (
 )
 
 
-def _ts_is_nanos(path: str) -> bool:
-    """Peek at one parquet footer to see whether ts needs the nanos
-    shim (file streams can't infer schema, so we must decide up front)."""
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    candidates = (
-        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if os.path.isdir(path)
-        else [path]
-    )
-    for f in candidates:
-        schema = pq.ParquetFile(f).schema  # parquet schema, NOT arrow:
-        # Spark's INT96 timestamps also surface as arrow timestamp[ns],
-        # but only true TIMESTAMP(NANOS) annotation needs the long shim
-        for i in range(len(schema)):
-            col = schema.column(i)
-            if col.name == "ts":
-                return (
-                    col.physical_type == "INT64"
-                    and "nanos" in str(col.logical_type).lower()
-                )
-    return False
-
-
 def read_event_stream(spark: SparkSession, path: str, **options) -> DataFrame:
     """Unbounded file-stream over the events layout: every new parquet
     file under ``path`` becomes a micro-batch. Schema is declared (file
@@ -59,7 +33,7 @@ def read_event_stream(spark: SparkSession, path: str, **options) -> DataFrame:
     get the nanos->micros shim, normal timestamp files pass through.
     Extra ``options`` go to the reader (e.g. ``maxFilesPerTrigger=1``
     to pin micro-batch granularity)."""
-    if _ts_is_nanos(path):
+    if "ts" in nanos_columns(path):
         return (
             spark.readStream.schema(EVENTS_SCHEMA_NANOS)
             .options(**options)

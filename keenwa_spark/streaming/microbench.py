@@ -162,6 +162,7 @@ def run_operator(
     from keenwa_spark.pipeline.sketches import cms_build
     from keenwa_spark.queries import ensure_views
     from keenwa_spark.session import session_scratch_dir
+    from keenwa_spark.sources.readers import read_parquet
     from keenwa_spark.streaming import (
         asof_stream,
         dedup_stream,
@@ -256,7 +257,7 @@ def run_operator(
             q.stop()
             raise TimeoutError("micro-bench stream did not drain in 600s")
         m = _progress_metrics(q)
-        m["store_rows"] = spark.read.parquet(f"{work}/store").count()
+        m["store_rows"] = read_parquet(spark, f"{work}/store").count()
         m["bound_key"] = "day_type"
         m["bound_on"] = "store_rows"
         return m
@@ -269,7 +270,7 @@ def run_operator(
             q.stop()
             raise TimeoutError("micro-bench stream did not drain in 600s")
         m = _progress_metrics(q)
-        m["store_rows"] = spark.read.parquet(f"{work}/store").count()
+        m["store_rows"] = read_parquet(spark, f"{work}/store").count()
         m["bound_key"] = "users"
         m["bound_on"] = "store_rows"
         return m

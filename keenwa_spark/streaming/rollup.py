@@ -40,6 +40,7 @@ import shutil
 from pyspark.sql import DataFrame
 
 from keenwa_spark.operators.rollup import rollup_merge, rollup_partials
+from keenwa_spark.sources.readers import read_parquet
 
 
 def rollup_refresh_stream(
@@ -74,7 +75,7 @@ def rollup_refresh_stream(
             value_col=value_col, grain=grain,
         )
         if os.path.exists(store_path):
-            stored = spark.read.parquet(store_path)
+            stored = read_parquet(spark, store_path)
             merged = rollup_merge(stored, delta)
         else:
             merged = delta

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from keenwa_spark.operators.cdc import merge_upsert
+from keenwa_spark.sources.readers import read_parquet
 
 
 def user_state_partials(batch_df: DataFrame) -> DataFrame:
@@ -65,7 +66,7 @@ def upsert_state_stream(
                     return  # replayed batch: already merged
         delta = user_state_partials(batch_df)
         if os.path.exists(store_path):
-            base = spark.read.parquet(store_path)
+            base = read_parquet(spark, store_path)
             merged = merge_upsert(
                 base,
                 delta,

@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
+import pathlib
 
 import pytest
 
 from keenwa_spark.catalog import Catalog
 from keenwa_spark.errors import ArgumentError, NotSupportedError
+from keenwa_spark.sources.readers import read_parquet
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
 
@@ -52,6 +56,136 @@ def test_events_nanos_timestamp_readable(spark):
     row = spark.sql("SELECT min(ts) AS t FROM events").collect()[0]
     assert row.t is not None
     assert str(spark.table("events").schema["ts"].dataType) == "TimestampType()"
+
+
+def _jobs_during(spark, group, action) -> list[int]:
+    """Spark job ids ``action`` launches (tracked under a fresh group)."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+
+
+def test_register_dir_launches_no_spark_job(spark):
+    """Schemas come from the footers the catalog opens on the driver;
+    Spark's schema inference would launch one job per table."""
+    cat = Catalog(spark)
+    assert _jobs_during(spark, "register_dir", lambda: cat.register_dir(SF_DIR)) == []
+    assert len(cat.tables) == 10
+
+
+#: every standard table of every testdata scale present next to SF_DIR
+_STANDARD_FILES = sorted(
+    glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "*.parquet"))
+)
+
+
+@pytest.fixture(scope="module")
+def edge_files(spark, tmp_path_factory):
+    """Parquet inputs off the standard tables' path: pyarrow NANOS,
+    INT96 and uint32 files, a Spark-written directory of many types,
+    and a hive-partitioned Spark directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("footers")
+    ts = pa.table({"ts": pa.array([1, 2], pa.timestamp("ns")), "x": [1, 2]})
+    pq.write_table(ts, str(d / "nanos.parquet"))
+    pq.write_table(ts, str(d / "int96.parquet"), use_deprecated_int96_timestamps=True)
+    pq.write_table(
+        pa.table({"u": pa.array([1, 2], pa.uint32()), "x": [1, 2]}),
+        str(d / "uint32.parquet"),
+    )
+    spark.sql(
+        "SELECT CAST(1.5 AS DECIMAL(12,3)) dec, array(1, 2) arr, "
+        "named_struct('a', 1, 'b', 'x') st, map('k', 1.0D) m, "
+        "DATE'2020-01-01' d, X'0102' bin, CAST(1.5 AS FLOAT) f, "
+        "CAST(3 AS TINYINT) ti, true bo, CAST('abc' AS VARCHAR(10)) vc, "
+        "TIMESTAMP'2020-01-01 00:00:00' ts"
+    ).write.parquet(str(d / "spark_mix"))
+    hive = spark.range(20).selectExpr("id", "id % 3 AS k", "CAST(id AS STRING) s")
+    hive.write.partitionBy("k").parquet(str(d / "hive"))
+    return d
+
+
+def _assert_footer_schema_exact(spark, path, partition_cols=()):
+    """``parquet_schema`` is Spark's inferred data schema or ``None``,
+    and ``read_parquet`` ends up with Spark's inferred schema either way."""
+    from pyspark.sql.types import StructType
+
+    from keenwa_spark.sources.readers import parquet_schema
+
+    inferred = spark.read.parquet(path).schema
+    ours = parquet_schema(path, spark.conf)
+    data = StructType([f for f in inferred.fields if f.name not in partition_cols])
+    assert ours is None or ours == data, (ours, data)
+    assert read_parquet(spark, path).schema == inferred
+    return ours
+
+
+@pytest.mark.parametrize(
+    "path", _STANDARD_FILES, ids=lambda p: os.path.relpath(p, os.path.dirname(SF_DIR))
+)
+def test_footer_schema_matches_inference_standard(spark, path):
+    assert _assert_footer_schema_exact(spark, path) is not None
+
+
+@pytest.mark.parametrize(
+    "name, partition_cols, derived",
+    [
+        ("nanos.parquet", (), True),
+        ("int96.parquet", (), True),
+        ("spark_mix", (), True),
+        ("hive", ("k",), True),
+        ("uint32.parquet", (), False),
+    ],
+)
+def test_footer_schema_matches_inference_edge(
+    spark, edge_files, name, partition_cols, derived
+):
+    from pyspark.sql.types import LongType, TimestampType
+
+    path = str(edge_files / name)
+    ours = _assert_footer_schema_exact(spark, path, partition_cols)
+    assert (ours is not None) == derived
+    if name == "nanos.parquet":
+        assert ours["ts"].dataType == LongType()
+    if name == "int96.parquet":
+        assert ours["ts"].dataType == TimestampType()
+    if derived:
+        assert _jobs_during(spark, f"read_{name}", lambda: read_parquet(spark, path)) == []
+
+
+#: engine modules that may call ``spark.read.parquet`` without a schema,
+#: each with the reason the footer rule does not fit there
+_BARE_PARQUET_READS = {
+    "stream_fuzz.py": "the harness reads a file sink's output through its "
+    "_spark_metadata log, which may sit next to uncommitted files left by "
+    "the kill-restart cases; Spark's inference reads committed files only",
+}
+
+
+def test_no_bare_parquet_reads_outside_readers():
+    """A bare ``<x>.read.parquet(...)`` runs Spark's schema inference, a
+    Spark job per call; engine reads go through ``read_parquet``."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "keenwa_spark"
+    found = set()
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+            ):
+                found.add(rel)
+    assert found - {"sources/readers.py"} == set(_BARE_PARQUET_READS)
 
 
 def test_engine_sql_gate(engine):
