@@ -101,8 +101,8 @@ def bloom_probe_dense(
     a broadcast dense word array. Zero joins; the probe side is
     scanned once and never shuffled.
 
-    Three measured pitfalls shape the construction (probe history in
-    tools/r10b_sketch_scale_probe.py, m=2^20, 500k docs):
+    Three measured pitfalls shape the construction (the ``bloom``
+    family of tools/scale_probe.py, m=2^20, 500k docs):
     - an ``array(lit, lit, ...)`` of m/32 elements costs ~8s of fixed
       expression-tree/plan time per query (and PySpark's ``F.lit(list)``
       desugars to exactly that — it is NOT one Literal node);

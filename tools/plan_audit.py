@@ -1,9 +1,8 @@
-"""Refresh the plan-audit table in SCALE.md: executed-plan audit of
-the bench headline suite at sf0.1.
+"""Refresh the plan audit of the bench headline suite: executed-plan
+censuses at sf0.1, stored in SCALE.json under ``audit`` and rendered
+into SCALE.md by ``tools/scale_probe.render``.
 
-Run: python tools/plan_audit.py   (replaces ONLY the audit table
-in-place — the narrative sections of SCALE.md are hand-maintained and
-preserved).
+Run: python tools/plan_audit.py
 
 Each query is EXECUTED (collect) so the AQE-final plan is audited; the
 GW column counts unbounded single-partition windows (plans.py
@@ -18,9 +17,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLE_HEAD = "| query | BHJ | SMJ | NLJ | Cart | Exch | PyEval | GW | Pushed |"
-OLD_HEAD = "| query | BHJ | SMJ | NLJ | Cart | Exch | PyEval | Pushed |"
-
 
 def main() -> None:
     from bench import HEADLINE
@@ -32,6 +28,7 @@ def main() -> None:
     )
     from keenwa_spark.queries import load_all
     from keenwa_spark.session import get_spark
+    from tools import scale_probe
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan_audit")
@@ -42,24 +39,27 @@ def main() -> None:
         df = registry[name].fn(spark, sf_dir)
         df.collect()
         s = summarize(df)
-        gw = len(partitionless_windows(executed_plan_text(df)))
-        rows.append(
-            f"| {name} | {s.broadcast_joins} | {s.sort_merge_joins} | "
-            f"{s.nested_loop_joins} | {s.cartesian_products} | {s.exchanges} | "
-            f"{s.python_evals} | {gw} | {'yes' if s.pushed_filters else 'no'} |"
-        )
+        rows.append({
+            "query": name,
+            "bhj": s.broadcast_joins,
+            "smj": s.sort_merge_joins,
+            "nlj": s.nested_loop_joins,
+            "cart": s.cartesian_products,
+            "exch": s.exchanges,
+            "py": s.python_evals,
+            "gw": len(partitionless_windows(executed_plan_text(df))),
+            "pushed": s.pushed_filters,
+        })
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
-    )
-    text = open(path).read()
-    head = TABLE_HEAD if TABLE_HEAD in text else OLD_HEAD
-    start = text.index(head)
-    end = text.index("\n\n", start)
-    table = TABLE_HEAD + "\n|---|---|---|---|---|---|---|---|---|\n" + "\n".join(rows)
-    with open(path, "w") as f:
-        f.write(text[:start] + table + text[end:])
-    print(f"updated audit table in {path} ({len(rows)} queries)")
+    data = scale_probe.load()
+    data["audit"] = {
+        "base": os.path.basename(os.path.abspath(sf_dir)),
+        "measured": scale_probe.commit(),
+        "rows": rows,
+    }
+    scale_probe.save(data)
+    scale_probe.write_md(data)
+    print(f"updated the audit in {scale_probe.SCALE_JSON} and SCALE.md ({len(rows)} queries)")
 
 
 if __name__ == "__main__":
