@@ -271,9 +271,3 @@ class Catalog:
             sort=idx.columns,
         )
         return managed
-
-    def is_broadcastable(self, name: str, threshold_bytes: int = 64 << 20) -> bool:
-        """Small enough to broadcast-join (keenwa lacks broadcast; this is
-        the scale-aware upgrade its cost model would want)."""
-        tdef = self.tables.get(name)
-        return bool(tdef and tdef.size_bytes is not None and tdef.size_bytes < threshold_bytes)

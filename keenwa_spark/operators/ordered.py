@@ -516,6 +516,11 @@ def exact_interpolated_percentiles(
     return out
 
 
+#: distinct-value count up to which ``with_global_rank`` broadcasts
+#: its ranks side (two longs a row: 500k rows is about 8 MB)
+_RANK_BROADCAST_ROWS = 500_000
+
+
 def with_global_rank(
     df: DataFrame,
     col: str,
@@ -524,7 +529,6 @@ def with_global_rank(
     dense: bool = False,
     n_buckets: int | None = None,
     materialize: bool = True,
-    broadcast_rows: int = 500_000,
 ) -> DataFrame:
     """``RANK()`` (gaps) or ``DENSE_RANK()`` ``OVER (ORDER BY col)`` as
     bigint ``out_col`` — two-pass, no single-partition window, and no
@@ -541,10 +545,12 @@ def with_global_rank(
     The join-back is NULL-SAFE (``<=>``): ``RANK() OVER (ORDER BY
     col)`` ranks NULL rows too (NULLS FIRST asc / LAST desc), so a
     null-unsafe equi-join would silently drop them (ADVICE r06 item
-    1). When the distinct domain is at most ``broadcast_rows`` (known
-    exactly from the grouped-count pass) the ranks side is broadcast —
-    the common leaderboard case joins without shuffling ``df``
-    (VERDICT r06 item 7); pass 0 to disable the gate."""
+    1). The planner's size estimate for the ranks side (checkpointed
+    range-bucket passes) is no smaller than ``df``'s, so unhinted it
+    builds the join on ``df`` and adds a shuffle. When the distinct
+    domain is at most ``_RANK_BROADCAST_ROWS`` (counted exactly by the
+    grouped-count pass) the ranks side is broadcast instead; above
+    that the planner chooses the join."""
     if materialize:
         df = df.localCheckpoint(eager=False)
     counts = (
@@ -580,7 +586,7 @@ def with_global_rank(
             .drop("__cum")
         )
     ranks = vals.select(F.col(col).alias("__kw_rk_v"), out_col)
-    if broadcast_rows and n_distinct <= broadcast_rows:
+    if n_distinct <= _RANK_BROADCAST_ROWS:
         ranks = F.broadcast(ranks)
     return df.join(ranks, F.col(col).eqNullSafe(F.col("__kw_rk_v"))).drop(
         "__kw_rk_v"

@@ -111,7 +111,7 @@ def skew_report(
     w = Window.orderBy(F.col("key_count").desc(), F.col(key_col).asc())
     top = top.withColumn("rnk", F.row_number().over(w).cast("bigint"))
     return (
-        top.crossJoin(F.broadcast(summary))
+        top.crossJoin(summary)
         .select(
             "rnk",
             F.col(key_col).alias("key"),

@@ -151,7 +151,7 @@ def bloom_probe_join(
     exploded = probes.select(
         *key_cols, F.explode(F.expr(f"array({pos})")).alias("pos")
     ).withColumn("word_idx", F.expr(f"CAST(pos div {WORD_BITS} AS INT)"))
-    joined = exploded.join(F.broadcast(bloom), "word_idx", "left")
+    joined = exploded.join(bloom, "word_idx", "left")
     set_bit = F.expr(
         f"word_val IS NOT NULL AND "
         f"(shiftright(word_val, CAST(pos % {WORD_BITS} AS INT)) & 1) = 1"

@@ -444,7 +444,7 @@ def pagerank(
     )
     outd = e2.groupBy("src").agg(F.count("*").cast("bigint").alias("outd"))
     n_row = nodes.agg(F.count("*").alias("n"))
-    base = nodes.crossJoin(F.broadcast(n_row))
+    base = nodes.crossJoin(n_row)
     ranks = base.withColumn("rank", F.expr("CAST(1.0 AS DOUBLE) / n")).select(
         "node", "rank"
     )

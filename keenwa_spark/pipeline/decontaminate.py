@@ -9,8 +9,10 @@ it contains, and a contaminated flag.
 
 Scale design (100 TB training corpus, MB-GB benchmark side):
 - The benchmark side reduces to DISTINCT 8-byte n-gram hashes —
-  millions of rows at most — and is BROADCAST: the training corpus is
-  scanned once, never shuffled on text.
+  millions of rows at most. The planner broadcasts it while it is
+  under the threshold, so the training corpus is scanned once and
+  never shuffled on text; above it the join falls back to a
+  sort-merge join instead of failing.
 - Doc text never leaves the JVM: shingling/hashing is codegen
   (split + transform + md5-derived hash, same frozen constants as the
   dedup family — pipeline/hashing.py).
@@ -65,10 +67,8 @@ def decontaminate(
     ``docs.join(result.where("contaminated"), id_col, "left_anti")``
     to drop flagged docs.
     """
-    bench = F.broadcast(
-        benchmark_ngram_hashes(benchmark, n=n, text_col=text_col).withColumn(
-            "__hit", F.lit(1)
-        )
+    bench = benchmark_ngram_hashes(benchmark, n=n, text_col=text_col).withColumn(
+        "__hit", F.lit(1)
     )
     # per-doc DISTINCT n-gram hashes as a per-row projection, exploded:
     # dedup happens in the projection (array_distinct), so the join
@@ -105,11 +105,11 @@ def fuzzy_decontaminate(
     leakage that exact n-gram matching (``decontaminate``) misses.
 
     Scale shape mirrors the exact variant: the benchmark side reduces
-    to DISTINCT (band, key) rows — k/bands strings per eval doc — and
-    is BROADCAST; the corpus side is the zero-shuffle signature
-    projection (dedup.minhash_signatures) plus an inline band
-    explosion, so corpus text never shuffles and the only shuffle is
-    the per-doc hit count. Output: (id, n_band_hits, contaminated);
+    to DISTINCT (band, key) rows — k/bands strings per eval doc — that
+    the planner broadcasts while under the threshold; the corpus side
+    is the zero-shuffle signature projection (dedup.minhash_signatures)
+    plus an inline band explosion, so corpus text never shuffles and
+    the only shuffle is the per-doc hit count. Output: (id, n_band_hits, contaminated);
     docs with fewer words than a shingle are absent (vacuously clean),
     as in the exact variant.
     """
@@ -138,7 +138,7 @@ def fuzzy_decontaminate(
     )
     return (
         band_rows(docs)
-        .join(F.broadcast(eval_keys), ["band", "bkey"], "left")
+        .join(eval_keys, ["band", "bkey"], "left")
         .groupBy(id_col)
         .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("bigint").alias("n_band_hits"))
         .withColumn("contaminated", F.col("n_band_hits") >= 1)

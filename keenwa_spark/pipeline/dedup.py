@@ -341,9 +341,10 @@ def lsh_verified_pairs(
     only candidates whose true Jaccard clears ``threshold``. The
     verification is CANDIDATE-LOCAL for real: the corpus is first
     semi-filtered to the ids that appear in some candidate pair
-    (broadcast semi-join — the candidate id set is tiny by
-    construction), and only those docs build their sorted distinct
-    shingle-hash array, as a per-row projection behind the
+    (a semi-join the planner sizes: broadcast while the candidate id
+    set is under the threshold, a sort-merge join when it is not), and
+    only those docs build their sorted distinct shingle-hash array,
+    as a per-row projection behind the
     explode(array(...)) Generate barrier (same discipline as the
     minhash signature fold). The earlier corpus-wide
     explode+distinct+collect_list build cost two full-corpus shuffles
@@ -364,7 +365,7 @@ def lsh_verified_pairs(
         # lazy persist (not an eager localCheckpoint): construction
         # stays a pure transformation, the cache is lineage-recoverable
         # on executor loss, and within the single downstream action the
-        # candidate job still runs once (the broadcast semi-filter
+        # candidate job still runs once (the id semi-filter
         # materializes it before the final pair joins reuse it)
         .persist()
     )
@@ -379,7 +380,7 @@ def lsh_verified_pairs(
     # references it.
     hashed = f"transform({_shingles(text_col, n)}, s -> {spark_hash64('s')})"
     sets = (
-        df.join(F.broadcast(cand_ids), id_col, "left_semi")
+        df.join(cand_ids, id_col, "left_semi")
         .select(
             F.col(id_col),
             F.explode(

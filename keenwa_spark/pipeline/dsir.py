@@ -38,9 +38,9 @@ Scale shape (100 TB source corpus):
   model fit and the scoring pass (persisted, same policy knob as
   lm_transition_score).
 - the model is a ``n_buckets``-row table (≤ 4096): groupBy(bucket) is
-  map-side combinable into at most B rows per task, and the fitted
-  model + its totals ride as BROADCASTS — the vocabulary never
-  shuffles, the corpus shuffles only doc-keyed integer partials.
+  map-side combinable into at most B rows per task, and the planner
+  broadcasts the fitted model and its one-row totals — the vocabulary
+  never shuffles, the corpus shuffles only doc-keyed integer partials.
 - hashing is the engine-portable md5 bucket (pipeline/hashing.py), so
   yesterday's weights reproduce today on any engine.
 
@@ -141,7 +141,7 @@ def dsir_weights(
                 "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
             ).alias("__lsum")
         )
-    masses = toks.join(F.broadcast(model), "__b").groupBy(id_col).agg(*aggs)
+    masses = toks.join(model, "__b").groupBy(id_col).agg(*aggs)
     spine = df.select(F.col(id_col)).distinct()
     b = F.lit(n_buckets).cast("bigint")
     if form == "log":
@@ -166,7 +166,7 @@ def dsir_weights(
         ).alias("weight")
     return (
         spine.join(masses, id_col, "left")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(F.col(id_col), "n_tokens", "t_mass", "s_mass", weight)
     )
 

@@ -38,7 +38,7 @@ def quantile_bucketize(
     out_col = out_col or f"{col}_bin"
     cuts = fit_quantile_cuts(df, col, n_bins)
     return (
-        df.crossJoin(F.broadcast(cuts))
+        df.crossJoin(cuts)
         .withColumn(
             out_col,
             F.when(F.col(col).isNotNull(), quantile_bin_of(F.col(col))),
@@ -77,7 +77,7 @@ def robust_scale(
     )
     iqr = F.col("__p75") - F.col("__p25")
     return (
-        df.join(F.broadcast(stats), on=keys, how="left")
+        df.join(stats, on=keys, how="left")
         .withColumn(
             out_col,
             F.when(iqr > 0, (F.col(col) - F.col("__p50")) / iqr),
@@ -105,8 +105,9 @@ def target_encode(
     partition-order-independent; the per-row LOO adjustment is two
     IEEE ops on the exact totals.
 
-    Plan: one groupBy fit, one broadcast join back — category
-    cardinality is vocabulary-bounded.
+    Plan: one groupBy fit, one join back — broadcast while the
+    category table (vocabulary-bounded) is under the threshold, a
+    sort-merge join above it.
     """
     out_col = out_col or f"{cat_col}_te"
     dec = F.col(target_col).cast(f"decimal(18,{target_scale})")
@@ -114,7 +115,7 @@ def target_encode(
         F.count(target_col).cast("bigint").alias("__n"),
         F.sum(dec).cast("double").alias("__sum"),
     )
-    joined = df.join(F.broadcast(stats), on=cat_col, how="left")
+    joined = df.join(stats, on=cat_col, how="left")
     y = F.col(target_col)
     if leave_one_out:
         enc = F.when(

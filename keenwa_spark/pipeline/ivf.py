@@ -308,8 +308,10 @@ def ivf_search(
         ).alias("cid"),
     )
     scored = (
-        # probe side = queries x nprobe rows — tiny by construction;
-        # broadcast so the corpus-side inverted list never shuffles on cid
+        # probe side = queries x nprobe rows, but it descends from the
+        # _with_cells model cross join and so has no size estimate:
+        # unhinted, the planner would broadcast or shuffle the corpus
+        # side instead
         inverted.join(F.broadcast(probed), "cid")
         .filter(F.col("vid") != F.col("query_id"))
         .withColumn("cos_sim", F.expr(_COS))

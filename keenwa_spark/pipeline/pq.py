@@ -566,7 +566,10 @@ def _emit_topk(
 ) -> DataFrame:
     """Shared tail of the ADC searchers: emit the ADC top-k directly,
     or re-rank the ADC top-``refine`` shortlist by exact squared L2
-    (broadcast shortlist -> one more corpus scan, no corpus shuffle)."""
+    (broadcast shortlist -> one more corpus scan, no corpus shuffle).
+    The shortlist descends from the model_df query tables, so the
+    planner has no size for it; the query vectors are sized from their
+    scan and left to the planner."""
     if refine is None:
         return ranked.filter(F.col("rnk") <= topk).select(
             "query_id",
@@ -581,7 +584,7 @@ def _emit_topk(
     )
     exact = (
         vecs.join(F.broadcast(short), "vid")
-        .join(F.broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .withColumn("l2_dist", F.expr(_SQD.format(a="v", b="qv")))
     )
     w2 = Window.partitionBy("query_id").orderBy(

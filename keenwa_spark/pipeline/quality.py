@@ -285,7 +285,7 @@ def winsorize(
             F.col("__q0").alias("q_lo"),
             F.col("__q1").alias("q_hi"),
         )
-        joined = df.join(F.broadcast(stats), group_col)
+        joined = df.join(stats, group_col)
     return joined.withColumn(
         f"{value_col}_w", F.least(F.greatest(v, F.col("q_lo")), F.col("q_hi"))
     )
@@ -342,9 +342,9 @@ def zscore_scale(
         F.expr(split12).alias("__s2"),
     )
     if group_col is None:
-        joined = df.crossJoin(F.broadcast(stats))
+        joined = df.crossJoin(stats)
     else:
-        joined = df.join(F.broadcast(stats), group_col)
+        joined = df.join(stats, group_col)
     mean = F.col("__s1") / F.col("__n")
     # n > 1 guard: for a singleton group the 0/0 divide is NULL on
     # Spark but NaN on IEEE-strict engines (DuckDB) — the explicit
@@ -428,7 +428,7 @@ def quantile_histogram(df: DataFrame, col: str, n_bins: int) -> DataFrame:
     cuts = fit_quantile_cuts(df, col, n_bins)
 
     binned = (
-        vals.crossJoin(F.broadcast(cuts))
+        vals.crossJoin(cuts)
         .select(quantile_bin_of(F.col("__v")).alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))

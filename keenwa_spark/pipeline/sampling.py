@@ -332,7 +332,7 @@ def negative_samples(
     )
     anchors = (
         df.select(id_col)
-        .crossJoin(F.broadcast(n_row))
+        .crossJoin(n_row)
         .selectExpr(
             id_col,
             "__n",
@@ -406,7 +406,7 @@ def temperature_mixture_rates(
     weight = F.expr(wfn.format(n="__n"))
     q = weight / F.col("__S")
     return (
-        counts.crossJoin(F.broadcast(fold))
+        counts.crossJoin(fold)
         .select(
             domain_col,
             F.col("__n").cast("bigint").alias("n_docs"),

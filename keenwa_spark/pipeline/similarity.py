@@ -97,15 +97,15 @@ def lsh_bucket_topk(
     ``multiprobe=1`` (the DEFAULT — justified by measurement, below)
     additionally probes every bucket at Hamming distance 1 from the
     query's bucket (the classic multi-probe LSH recall lift): the
-    QUERY side fans out to ``bits + 1`` probe rows — still tiny, still
-    broadcast — while the corpus side is untouched, so the join stays
-    bucket-local and the corpus is still scanned once. Measured
-    recall@5 at bits=8 (SCALE.md ANN recall tables): 0.01 -> 0.10 on
+    QUERY side fans out to ``bits + 1`` probe rows — still small
+    enough for the planner to broadcast — while the corpus side is
+    untouched, so the join stays bucket-local and the corpus is still
+    scanned once. Measured recall@5 at bits=8 (SCALE.md ANN recall tables): 0.01 -> 0.10 on
     the adversarial i.i.d.-random sf0.1 embeddings and 0.36 -> 0.74 on
     the clustered mixture-of-Gaussians fixture
     (pipeline/fixtures.py) — multiprobe dominates single-probe on BOTH
     distributions for a (bits+1)x probe fan-out confined to the
-    broadcast query side, hence the shipped default. Pass
+    query side, hence the shipped default. Pass
     ``multiprobe=0`` for the minimal single-bucket plan."""
     if multiprobe not in (0, 1):
         raise ValueError(f"multiprobe must be 0 or 1, got {multiprobe}")
@@ -133,7 +133,7 @@ def lsh_bucket_topk(
         F.expr(_sign_bucket(vec_col, bits)).alias("bucket"),
     )
     scored = (
-        c.join(F.broadcast(q), "bucket")
+        c.join(q, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", F.expr(_COS.format(a="qv", b="cv")))
     )
@@ -424,7 +424,7 @@ def _centroid_assign(
         "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         "CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS d, c.cid AS cid))"
     )
-    return emb.crossJoin(F.broadcast(model)).select(
+    return emb.crossJoin(model).select(
         F.col(label_col),
         F.expr(f"array_min({dists}).cid").alias("pred"),
     )
@@ -563,7 +563,7 @@ def mmr_rerank(
         )
         rem = cand.join(sel.select("__id"), "__id", "left_anti")
         max_sim = (
-            rem.crossJoin(F.broadcast(picked_vecs))
+            rem.crossJoin(picked_vecs)
             .withColumn("__sim", F.expr(_safe_cos("__v", "__sv")))
             .groupBy("__id")
             .agg(F.max("__sim").alias("__ms"))
@@ -645,7 +645,7 @@ def mmr_rerank_grouped(
         )
         rem = cand.join(sel.select("__q", "__id"), ["__q", "__id"], "left_anti")
         sims = (
-            rem.join(F.broadcast(picked), F.col("__q") == F.col("__sq"))
+            rem.join(picked, F.col("__q") == F.col("__sq"))
             .withColumn("__sim", F.expr(_safe_cos("__v", "__sv")))
             .groupBy("__q", "__id")
             .agg(F.max("__sim").alias("__ms"))

@@ -241,8 +241,8 @@ def cms_estimate(
 ) -> DataFrame:
     """Point-query the sketch for each item row: adds ``est_cnt`` =
     min over the d counters (0 if any counter row is absent). The
-    sketch side is tiny (<= d*w rows) and broadcast; the item side is
-    never shuffled beyond the fold-back groupBy."""
+    sketch side is tiny (<= d*w rows), so the planner broadcasts it;
+    the item side is never shuffled beyond the fold-back groupBy."""
     arms = ", ".join(
         f"named_struct('j', {j}, 'pos', {_cms_pos(hash_col, j, w)})"
         for j in range(d)
@@ -251,7 +251,7 @@ def cms_estimate(
         *key_cols, F.explode(F.expr(f"array({arms})")).alias("jp")
     ).select(*key_cols, F.col("jp.j").alias("j"), F.col("jp.pos").alias("pos"))
     return (
-        exploded.join(F.broadcast(sketch), ["j", "pos"], "left")
+        exploded.join(sketch, ["j", "pos"], "left")
         .groupBy(*key_cols)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_cnt"))
     )

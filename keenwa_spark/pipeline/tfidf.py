@@ -67,7 +67,7 @@ def tfidf(
     return (
         tf.join(df_t, "term")
         .filter(F.col("df_t") >= min_df)
-        .crossJoin(F.broadcast(n_row))
+        .crossJoin(n_row)
         # idf_r: exact double arithmetic — bit-identical cross-engine;
         # replace with ln((n_docs - df_t + 0.5) / (df_t + 0.5)) for
         # classic BM25 idf (breaks bit-exact oracle compare).
@@ -155,8 +155,8 @@ def bm25_topk(
         F.count("*").alias("n_rows"),
     )
     scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(stats))
+        tf.join(df_t, "term")
+        .crossJoin(stats)
         .withColumn(
             "score",
             F.expr(
@@ -215,8 +215,8 @@ def search_topk(
     df_t = tf.groupBy("term").agg(F.countDistinct(id_col).alias("df_t"))
     n_row = df.agg(F.countDistinct(id_col).alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(n_row))
+        tf.join(df_t, "term")
+        .crossJoin(n_row)
         .withColumn(
             "score",
             F.expr(

@@ -417,8 +417,8 @@ def ev_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         pairs.join(F.broadcast(s1), "t1")
-        .join(F.broadcast(s2), "t2")
-        .crossJoin(F.broadcast(totals))
+        .join(s2, "t2")
+        .crossJoin(totals)
         .select(
             "t1", "t2", "n_both", "n_t1", "n_t2", "n_baskets",
             (
@@ -644,7 +644,7 @@ def ev_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = F.col("s").cast("decimal(20,6)") * (
         F.lit(2) * F.col("i") - F.col("n") - F.lit(1)
     ).cast("decimal(6,0)")
-    return ranked.crossJoin(F.broadcast(totals)).agg(
+    return ranked.crossJoin(totals).agg(
         F.max("n").cast("bigint").alias("n_users"),
         F.sum("s").cast("double").alias("total_spend"),
         (

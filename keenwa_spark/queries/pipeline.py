@@ -2926,7 +2926,7 @@ def pl_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         ") AS BIGINT)"
     )
     return (
-        ranked.crossJoin(F.broadcast(n_total))
+        ranked.crossJoin(n_total)
         .select("doc_id", "score", stage.alias("stage"))
         .orderBy("doc_id")
     )
@@ -3843,7 +3843,7 @@ def pl_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         digits.groupBy("digit")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "digit",
             "n",
@@ -3913,7 +3913,7 @@ def pl_category_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_a", F.lit(0)).cast("bigint").alias("n_a"),
             F.coalesce("n_b", F.lit(0)).cast("bigint").alias("n_b"),
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
     )
     share_a = F.col("n_a").cast("double") / F.col("__ta")
     share_b = F.col("n_b").cast("double") / F.col("__tb")
@@ -4014,7 +4014,7 @@ def pl_numeric_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cum = (
         with_global_cumsum(pts, ["v"], "v", {"cca": "ca", "ccb": "cb"})
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         # KS is defined only when BOTH samples are non-empty: filter
         # BEFORE the CDF divisions (ANSI divide-by-zero otherwise —
         # 1-row sweep find); one empty side -> zero output rows
@@ -4032,9 +4032,9 @@ def pl_numeric_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # argmax without a global ROW_NUMBER: join to the max gap, then the
     # smallest value among ties — both ordinary parallel aggregates
-    best = scored.crossJoin(
-        F.broadcast(scored.agg(F.max("d").alias("__md")))
-    ).where(F.col("d") == F.col("__md"))
+    best = scored.crossJoin(scored.agg(F.max("d").alias("__md"))).where(
+        F.col("d") == F.col("__md")
+    )
     return best.agg(
         F.min("__na").cast("bigint").alias("n_a"),
         F.min("__nb").cast("bigint").alias("n_b"),
@@ -4116,9 +4116,9 @@ def pl_association_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = F.col("nr").cast("double") * F.col("nc") / F.col("n")
     chi = (
-        obs.join(F.broadcast(rl), "lang")
-        .join(F.broadcast(cl), "source")
-        .crossJoin(F.broadcast(m))
+        obs.join(rl, "lang")
+        .join(cl, "source")
+        .crossJoin(m)
         .select(
             "lang", "source",
             ((F.col("o") - e) * (F.col("o") - e) / e).alias("contrib"),
@@ -4221,7 +4221,7 @@ def pl_distinct_estimate_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(float(k - 1)) / (F.col("__hk") / F.lit(4294967296.0))
     )
     return (
-        exact.crossJoin(F.broadcast(kth))
+        exact.crossJoin(kth)
         .select(
             "exact_distinct",
             est.alias("kmv_estimate"),

@@ -265,7 +265,7 @@ def pl_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         true_top, sketch, "h", key_cols=("tok", "true_cnt"), d=d, w=w
     )
     return (
-        est.crossJoin(F.broadcast(total))
+        est.crossJoin(total)
         .select(
             "tok",
             "true_cnt",

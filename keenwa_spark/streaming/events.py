@@ -203,10 +203,12 @@ def interval_join_streams(
 
 def enrich_stream(events: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:
     """Stream-static dimension enrichment: join each micro-batch against
-    a (small) static dimension. The dim side is broadcast — the stream
-    NEVER shuffles, which is the only join shape that scales on a hot
-    event stream (a stream-side shuffle would re-partition every
-    micro-batch). The static side is re-read per batch, so slowly-
+    a static dimension. The dim side is forced to broadcast whatever
+    its size estimate: AQE does not re-plan streaming micro-batches, so
+    the planner's fallback for a dim over the threshold would be a
+    sort-merge join that re-partitions the stream every batch. The
+    cost is the dim's size: it must fit in executor memory, or the
+    query fails. The static side is re-read per batch, so slowly-
     changing dims pick up updates for free."""
     return events.join(F.broadcast(dim), on, "left")
 

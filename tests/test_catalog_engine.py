@@ -43,13 +43,6 @@ def test_directory_parquet_dataset(spark, tmp_path):
     assert cat.table("dir_table").count() == 100
 
 
-def test_broadcastable_classification(spark):
-    cat = Catalog(spark)
-    cat.register_dir(SF_DIR)
-    assert cat.is_broadcastable("region")
-    assert cat.is_broadcastable("nation")
-
-
 def test_events_nanos_timestamp_readable(spark):
     cat = Catalog(spark)
     cat.register_dir(SF_DIR)
