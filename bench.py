@@ -36,11 +36,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from perfbench.procstat import self_cpu_s, tree_cpu_s
+from perfbench.procstat import descendants, self_cpu_s
 
 #: directory that receives BENCH_DETAIL.json (tools/capture_plans.py
 #: writes its plans/ tree under it too)
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
+
+_TICK = os.sysconf("SC_CLK_TCK")
 
 DETAIL_FILE = "BENCH_DETAIL.json"
 
@@ -172,6 +174,31 @@ def jvm_pid(spark) -> int:
     return int(spark._jvm.java.lang.ProcessHandle.current().pid())
 
 
+def cpu_reading(pid: int) -> dict:
+    """CPU seconds per process, each with its reaped children's: this
+    process under ``"self"``, and ``pid`` and each live descendant under
+    ``(pid, start time)``."""
+    out = {"self": self_cpu_s()}
+    for p in [pid, *descendants(pid)]:
+        try:
+            with open(f"/proc/{p}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except FileNotFoundError:
+            continue  # exited while we walked the tree
+        # utime stime cutime cstime (fields 14-17), starttime (22)
+        out[(p, fields[19])] = sum(int(x) for x in fields[11:15]) / _TICK
+    return out
+
+
+def cpu_between(before: dict, after: dict) -> float:
+    """CPU seconds used between two ``cpu_reading``s. A process that
+    ended in between drops out of both readings: PySpark's worker daemon
+    ignores SIGCHLD, so a Python worker stopped after a minute idle
+    takes its CPU out of the tree instead of adding it to a parent's,
+    and subtracting its first reading can make the total negative."""
+    return sum(c - before.get(k, 0.0) for k, c in after.items())
+
+
 def time_best_of_3(run, spark) -> tuple[float, float, float, int, int]:
     """(best wall, CPU of that same run, max/min wall spread, rows,
     classes compiled) over three calls of ``run()``, which returns a row
@@ -187,11 +214,11 @@ def time_best_of_3(run, spark) -> tuple[float, float, float, int, int]:
     compiles0, _ = codegen_stats(spark)
     runs = []
     for _ in range(3):
-        cpu0 = tree_cpu_s(pid) + self_cpu_s()
+        cpu0 = cpu_reading(pid)
         t0 = time.perf_counter()
         rows = run()
         wall = time.perf_counter() - t0
-        runs.append((wall, tree_cpu_s(pid) + self_cpu_s() - cpu0))
+        runs.append((wall, cpu_between(cpu0, cpu_reading(pid))))
     compiles = codegen_stats(spark)[0] - compiles0
     wall, cpu = min(runs)
     return wall, cpu, max(w for w, _ in runs) / wall, rows, compiles

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from keenwa_spark.errors import ArgumentError
+from keenwa_spark.litdf import local_df
 
 ColumnLike = Union[str, Column]
 
@@ -44,68 +45,6 @@ def _col(c: ColumnLike) -> Column:
 
 def _expr(e: ColumnLike) -> Column:
     return F.expr(e) if isinstance(e, str) else e
-
-
-def _sql_literal(v) -> str | None:
-    """Spark-SQL literal for a plain scalar; None (the sentinel) if the
-    value needs the createDataFrame fallback. SQL NULL is rendered for
-    Python None (the enclosing CAST types it)."""
-    import datetime
-    import decimal
-    import math
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        if math.isnan(v) or math.isinf(v):
-            return f"CAST('{v}' AS DOUBLE)"
-        return repr(v)
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, bytes):
-        return "X'" + v.hex() + "'"
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP'{v.isoformat(sep=' ')}'"
-    if isinstance(v, datetime.date):
-        return f"DATE'{v.isoformat()}'"
-    return None
-
-
-def _values_local_relation(spark, rows, schema: str) -> DataFrame | None:
-    """Render inline rows as a SQL VALUES LocalRelation with every
-    column CAST to its declared type; None when a cell isn't a plain
-    scalar (caller falls back to createDataFrame) or rows is empty
-    (VALUES with zero tuples is not valid SQL)."""
-    from pyspark.sql.types import StructType
-
-    if not rows:
-        return None
-    try:
-        fields = StructType.fromDDL(schema).fields
-    except Exception:  # noqa: BLE001 — unparseable DDL: let the fallback raise
-        return None
-    rendered = []
-    for row in rows:
-        if len(row) != len(fields):
-            return None
-        cells = [_sql_literal(v) for v in row]
-        if any(c is None for c in cells):
-            return None
-        rendered.append("(" + ", ".join(cells) + ")")
-    names = ", ".join(f"c{i}" for i in range(len(fields)))
-    casts = ", ".join(
-        f"CAST(c{i} AS {f.dataType.simpleString()}) AS {f.name}"
-        for i, f in enumerate(fields)
-    )
-    return spark.sql(
-        f"SELECT {casts} FROM (VALUES {', '.join(rendered)}) AS v({names})"
-    )
 
 
 _JOIN_TYPES = {
@@ -186,20 +125,9 @@ class PlanBuilder:
         return self._next(self.spark.table(table).select(*columns))
 
     def values(self, rows: Sequence[tuple], schema: str) -> "PlanBuilder":
-        """Inline rows (reference LogicalValues, logical/values.rs:9-13).
-
-        Compiled to a SQL ``VALUES`` LocalRelation when every cell is a
-        plain scalar — ``spark.createDataFrame`` builds a 32-partition
-        Python-RDD relation whose per-partition worker round trips cost
-        ~25s under a join (measured by the builder fuzzer, round 10) vs
-        ~1s for the JVM-side LocalRelation, which Catalyst also
-        constant-folds and broadcasts for free. Non-scalar cells
-        (arrays, maps, structs) fall back to createDataFrame."""
-        rows = list(rows)
-        local = _values_local_relation(self.spark, rows, schema)
-        if local is not None:
-            return self._next(local)
-        return self._next(self.spark.createDataFrame(rows, schema))
+        """Inline rows (reference LogicalValues, logical/values.rs:9-13),
+        planned as a sized LocalRelation (``litdf.local_df``)."""
+        return self._next(local_df(self.spark, rows, schema))
 
     def empty(self, return_one_row: bool = False) -> "PlanBuilder":
         """0- or 1-row relation (reference LogicalEmpty, logical/empty.rs)."""

@@ -1,93 +1,51 @@
-"""Small literal DataFrames WITHOUT the Python-RDD path.
+"""DataFrames from driver-side rows.
 
-``spark.createDataFrame(rows, schema)`` builds a 32-partition
-Python-RDD relation: every action scans it with one Python worker per
-partition, and under joins/broadcasts that fixed cost repeats per
-materialization — measured ~25s for a 4-row table under a cross join
-(the round-10 builder-fuzz finding that moved PlanBuilder.values and
-the conformance mini-catalog to SQL VALUES LocalRelations).
+Every frame the engine builds from Python values (inline
+``PlanBuilder.values`` rows, ANN centroids and codebooks, sketch
+reports, BPE merge tables, fixtures) goes through ``local_df``: the
+rows become one ``pyarrow.Table`` under the DDL schema, and
+``spark.createDataFrame(table, schema)`` hands it to the JVM as an
+Arrow stream. Spark plans that as a ``LocalRelation``:
 
-``literal_df`` is the typed-data sibling for the model/result tables
-the pipeline builds from driver-side Python values (ANN centroids,
-PQ codebooks, sketch reports): the rows are rendered as a pure-JVM
-literal expression tree (``F.lit``/``F.array``/``F.struct`` under one
-``explode``), so the plan is JVM-only and single-partition — no text
-round trip either, which keeps float64 values BIT-EXACT (``F.lit``
-ships the scalar through py4j, not through a SQL parser).
+- it has an exact ``sizeInBytes``, so the planner can decide joins
+  against it (a pickled Python-RDD scan is sized at
+  ``spark.sql.defaultSizeInBytes`` and needs a forced broadcast);
+- no Spark job or Python worker runs to build or to scan it;
+- no data value becomes a plan literal, so codegen stays constant-size
+  at any model size;
+- float64 cells travel as IEEE bits, never as text, so they stay
+  bit-exact;
+- naive ``datetime`` cells are read in the session time zone, like a
+  SQL ``TIMESTAMP`` literal (``createDataFrame(list)`` reads them in
+  the process time zone instead).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
-def _lit_of(v, dt: DataType):
-    if v is None:
-        return F.lit(None).cast(dt)
-    if isinstance(dt, ArrayType):
-        if len(v) == 0:
-            return F.array().cast(dt)
-        return F.array(*[_lit_of(x, dt.elementType) for x in v])
-    if isinstance(dt, StructType):
-        vals = list(v)
-        return F.struct(
-            *[
-                _lit_of(vals[i], f.dataType).alias(f.name)
-                for i, f in enumerate(dt.fields)
-            ]
-        )
-    return F.lit(v).cast(dt)
-
-
-def literal_df(
-    spark: SparkSession, rows: Sequence[tuple], schema: str
-) -> DataFrame:
-    """DataFrame of small literal ``rows`` under the DDL ``schema``,
-    built JVM-side (see module docstring). Intended for model-sized
-    data (tens to a few thousand cells) — the rows become literal
-    expression nodes, not a distributed dataset."""
-    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    if not rows:
-        return spark.createDataFrame([], st)
-    row_structs = [
-        F.struct(
-            *[
-                _lit_of(row[i], f.dataType).alias(f.name)
-                for i, f in enumerate(st.fields)
-            ]
-        )
-        for row in rows
-    ]
-    return (
-        spark.range(1)
-        .select(F.explode(F.array(*row_structs)).alias("__r"))
-        .select(*[F.col(f"__r.{f.name}").alias(f.name) for f in st.fields])
+def local_df(spark: SparkSession, rows: Sequence[Sequence], schema: str) -> DataFrame:
+    """DataFrame of ``rows`` (tuples in schema order) under the DDL
+    ``schema``, planned as a sized ``LocalRelation`` (see module
+    docstring)."""
+    st = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(st, timestamp_utc=False)
+    rows = list(rows)
+    width = len(st.fields)
+    for row in rows:
+        if len(row) != width:
+            raise ValueError(
+                f"row {row!r} has {len(row)} cells; schema {schema!r} "
+                f"has {width} columns"
+            )
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
-
-
-def model_df(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
-    """Small driver-side model rows as a SINGLE-partition Python-RDD
-    DataFrame.
-
-    The r13 optimization-round completion of the round-10 model-lift
-    A/B: plain ``spark.createDataFrame(rows, schema)`` parallelizes
-    into ``defaultParallelism`` slices, so every materialization of a
-    1-row broadcast model scans 32 near-empty Python partitions (one
-    Python worker handshake each); ``literal_df`` avoids the Python
-    scan but codegens every float as a plan literal, which DOUBLES
-    query wall at array-heavy model sizes (pq._model_df's measured
-    round-10 numbers). Pinning the parallelize to ONE slice keeps the
-    constant-size plan of the RDD route and pays exactly one Python
-    worker per materialization — measured r13 (sf0.1, best-of-3): a
-    broadcast-model assign pass drops 1.21s -> 0.61s, and a bare
-    model-frame collect 0.63s -> 0.41s. At production scale the model
-    is still broadcast-sized (<< 100 MB): one partition is the right
-    shape at any cluster size, never a parallelism loss.
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), 1), schema
-    )
+    return spark.createDataFrame(table, st)

@@ -95,7 +95,6 @@ def bucket_of(
     value: Column,
     cuts: list[float],
     descending: bool = False,
-    codegen: bool = False,
 ) -> Column:
     """Bucket index of ``value`` against literal ``cuts``, increasing
     along the global order (count of cuts <= value — value on a cut
@@ -105,24 +104,15 @@ def bucket_of(
     ``len(cuts)`` — matching Spark's NULLS FIRST / NULLS LAST
     defaults.
 
-    Two equivalent forms, chosen by ``codegen`` (round-7 measurement):
-    the default higher-order ``filter`` over a literal array compiles
-    instantly but its lambda is interpreted per row (~2x slower per
-    pass at 10M rows); ``codegen=True`` unrolls a sum of WHEN terms
-    that whole-stage codegen compiles to straight-line branches —
-    ~0.35s of one-time janino compile per distinct plan, worth it only
-    when the input is large (the tie path gates on its known row
-    count)."""
+    A higher-order ``filter`` over a literal array: it compiles
+    instantly, and it was 3x faster than an unrolled sum of WHEN terms
+    on a 1M-row mega-tie pass (that form's wide ``CASE WHEN`` Project
+    ran outside whole-stage codegen)."""
     if not cuts:
         return F.lit(0)
     v = value.cast("double")
-    if codegen:
-        asc = F.lit(0)
-        for c in cuts:
-            asc = asc + F.when(F.lit(float(c)) <= v, 1).otherwise(0)
-    else:
-        arr = F.array(*[F.lit(float(c)) for c in cuts])
-        asc = F.size(F.filter(arr, lambda c: c <= v))
+    arr = F.array(*[F.lit(float(c)) for c in cuts])
+    asc = F.size(F.filter(arr, lambda c: c <= v))
     return (F.lit(len(cuts)) - asc) if descending else asc
 
 
@@ -293,13 +283,9 @@ def _bucketed(
     # all value comparisons below are NATIVE-typed (no double shadow):
     # equality picks out exactly the heavy value's rows, and the
     # before/after test keeps the ordinal monotone even for a distinct
-    # neighbor value that collides with hv at double precision; the
-    # sub-split ordinal is evaluated in two passes over every row, so
-    # above the compile-amortization point the unrolled codegen form
-    # pays for itself (4x measured at 10M rows, see bucket_of)
-    cg = total > 1_000_000
+    # neighbor value that collides with hv at double precision
     v = F.col(bucket_col)
-    base_b = bucket_of(F.col(bucket_col), cuts, descending, codegen=cg)
+    base_b = bucket_of(F.col(bucket_col), cuts, descending)
     # non-tied rows: segment ordinal = bucket start + width of every
     # heavy-value block (and its preceding segment) that sorts BEFORE v
     expr = F.element_at(F.array(*[F.lit(s) for s in base_start]), base_b + 1)
@@ -314,12 +300,12 @@ def _bucketed(
         expr = F.when(
             v == F.lit(hv),
             F.lit(start)
-            + bucket_of(F.col(tie_bucket_col), tie_cuts[hv], False, codegen=cg),
+            + bucket_of(F.col(tie_bucket_col), tie_cuts[hv], False),
         ).otherwise(expr)
-    # the sub-split ordinal is a wide WHEN-chain, but it is pure
-    # whole-stage codegen (see bucket_of) — recomputing it in the
-    # re-stats pass and the window exchange is cheaper than a
-    # materializing checkpoint at every scale probed (1M/10M rows)
+    # the sub-split ordinal is a WHEN-chain over the heavy values —
+    # recomputing it in the re-stats pass and the window exchange is
+    # cheaper than a materializing checkpoint at every scale probed
+    # (1M/10M rows)
     refined = df.withColumn(_BKT, expr)
     stats = {r[_BKT]: r for r in refined.groupBy(_BKT).agg(*all_aggs).collect()}
     return refined, n_final, stats

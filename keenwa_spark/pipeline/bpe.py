@@ -41,6 +41,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.pipeline.dedup import normalized_text
 
 #: replace passes per merge round (converges runs up to 2^7 symbols)
@@ -129,10 +130,8 @@ def bpe_merge_table(
 ) -> DataFrame:
     """The learned merge list as a DataFrame:
     (round, left_sym, right_sym, merged, pair_count)."""
-    from keenwa_spark.litdf import literal_df
-
     rows = bpe_train(docs, rounds=rounds, text_col=text_col)
-    return literal_df(
+    return local_df(
         docs.sparkSession,
         rows,
         "round INT, left_sym STRING, right_sym STRING, "

@@ -10,7 +10,7 @@ recall floors and shipped defaults are justified on BOTH distributions
 (judge round-4 item 3).
 
 The generator is driver-side numpy (a fixture, not an operator): the
-result is handed to ``spark.createDataFrame`` and from there on every
+result is handed to ``litdf.local_df`` and from there on every
 measurement path is the same distributed code the random corpus uses.
 """
 
@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+
+from keenwa_spark.litdf import local_df
 
 
 def make_clustered_embeddings(
@@ -79,18 +80,11 @@ def make_clustered_embeddings(
                 mask = labels == c
                 z[mask] = (z[mask] * scales) @ q.T
     pts = centers[labels] + noise * z / np.sqrt(dim)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
     rows = [
         (int(i), [float(x) for x in np.float32(pts[i])], int(labels[i]))
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
 
 
 def make_near_dup_corpus(
@@ -133,4 +127,4 @@ def make_near_dup_corpus(
     for _ in range(n_noise):
         rows.append((did, " ".join(fresh_word() for _ in range(doc_words))))
         did += 1
-    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    return local_df(spark, rows, "doc_id BIGINT, text STRING")

@@ -14,14 +14,15 @@ Scale design (the faiss IVF recipe, re-expressed for Spark):
   (trivial at K x sample sizes); the 100 TB corpus never participates
   in training, only in one ASSIGNMENT pass;
 - corpus assignment is a shuffle-free single pass: the centroid model
-  enters the plan as a 1-row broadcast carrying an
-  ``array<struct<cid, cv>>`` column (BroadcastNestedLoopJoin against
-  one row), so the PLAN stays constant-size at any K. The r3 variant
-  inlined all K x dim doubles as SQL literals — every pass re-compiled
-  an O(K*dim) codegen expression (1.8x slower end-to-end at sf0.1 and
-  plan-analysis-fatal at production K); the r2 variant exploded
-  corpus x K rows through a window (a corpus-sized shuffle). Both
-  replaced by the broadcast-model map;
+  enters the plan as a 1-row sized LocalRelation carrying an
+  ``array<struct<cid, cv>>`` column, which the planner broadcasts
+  (BroadcastNestedLoopJoin against one row), so the PLAN stays
+  constant-size at any K. The r3 variant inlined all K x dim doubles
+  as SQL literals — every pass re-compiled an O(K*dim) codegen
+  expression (1.8x slower end-to-end at sf0.1 and plan-analysis-fatal
+  at production K); the r2 variant exploded corpus x K rows through a
+  window (a corpus-sized shuffle). Both replaced by the
+  broadcast-model map;
 - queries probe only their ``nprobe`` nearest cells; the probe side
   (queries x nprobe) is broadcast so the inverted corpus never
   shuffles on cid.
@@ -47,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from keenwa_spark.litdf import local_df
 
 _COS = (
     "aggregate(zip_with(v, qv, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
@@ -83,15 +86,10 @@ def _as_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 
 def _cells_df(spark: SparkSession, cents: Cents) -> DataFrame:
-    """The centroid model as ONE row of ``array<struct<cid, cv>>`` —
-    broadcast into corpus passes so centroid data never appears in the
-    plan text (constant-size codegen at any K). Python-RDD route ON
-    PURPOSE — see pq._model_df's round-10 A/B note: a JVM-literal tree
-    of the array-heavy model doubles query wall; single-slice
-    parallelize per litdf.model_df's r13 measurements."""
-    from keenwa_spark.litdf import model_df
-
-    return model_df(
+    """The centroid model as ONE row of ``array<struct<cid, cv>>``, a
+    sized LocalRelation (litdf.local_df): centroid data never appears
+    in the plan text (constant-size codegen at any K)."""
+    return local_df(
         spark,
         [([(cid, cv) for cid, cv in cents],)],
         "cells ARRAY<STRUCT<cid: INT, cv: ARRAY<DOUBLE>>>",
@@ -101,7 +99,7 @@ def _cells_df(spark: SparkSession, cents: Cents) -> DataFrame:
 def _with_cells(vecs: DataFrame, cents: Cents) -> DataFrame:
     """Corpus rows annotated with the broadcast ``cells`` model column
     (BroadcastNestedLoopJoin vs 1 row — no shuffle, no row blow-up)."""
-    return vecs.crossJoin(F.broadcast(_cells_df(vecs.sparkSession, cents)))
+    return vecs.crossJoin(_cells_df(vecs.sparkSession, cents))
 
 
 def _assign_ids(X, cents: Cents):
@@ -199,10 +197,8 @@ def ivf_train(
 ) -> DataFrame:
     """Train the coarse quantizer; returns (cid, cv) centroids as a
     DataFrame (API mirror of the other pipeline trainers)."""
-    from keenwa_spark.litdf import model_df
-
     cents = _train(emb, k_cells, iters, id_col, vec_col, train_rows)
-    return model_df(
+    return local_df(
         emb.sparkSession,
         [(cid, cv) for cid, cv in cents],
         "cid INT, cv ARRAY<DOUBLE>",
@@ -308,10 +304,9 @@ def ivf_search(
         ).alias("cid"),
     )
     scored = (
-        # probe side = queries x nprobe rows, but it descends from the
-        # _with_cells model cross join and so has no size estimate:
-        # unhinted, the planner would broadcast or shuffle the corpus
-        # side instead
+        # probe side = queries x nprobe rows, but the query vectors
+        # carry their source scan's estimate: unhinted, the planner
+        # would broadcast or shuffle the corpus side instead
         inverted.join(F.broadcast(probed), "cid")
         .filter(F.col("vid") != F.col("query_id"))
         .withColumn("cos_sim", F.expr(_COS))
@@ -344,8 +339,8 @@ def ivf_save(spark: SparkSession, cents: Cents, path: str) -> None:
     invalidate any stored assignment). float64 roundtrips parquet
     bit-exactly, so loaded models assign identically (pinned in
     tests/test_pipeline_extras.py)."""
-    spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], IVF_SCHEMA
+    local_df(
+        spark, [(cid, cv) for cid, cv in cents], IVF_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 

@@ -20,8 +20,9 @@ surface — beyond-reference mandate):
   ``train_rows``) — model-fit state constant in corpus size (the
   sanctioned IVF/centroid exception); the corpus participates only in
   the single shuffle-free ENCODE pass;
-- the codebook model rides into plans as a 1-row broadcast
-  ``array<struct>`` column (constant-size plan text at any m·k);
+- the codebook model rides into plans as a 1-row sized LocalRelation
+  holding an ``array<struct>`` column, which the planner broadcasts
+  (constant-size plan text at any m·k);
 - query distance tables are computed on the (small, broadcast) query
   side; the corpus-side ADC pass is one zip_with lookup + sequential
   fold per row — no shuffle, no Python;
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.pipeline.ivf import TRAIN_ROWS, _as_vecs, _assign_ids
 
 #: per subspace: [(pos, centroid subvector)] with pos 1-based in
@@ -176,17 +178,10 @@ def _fit_books(
 
 
 def _model_df(spark, books: Books) -> DataFrame:
-    # Python-RDD route ON PURPOSE (round-10 A/B): a litdf JVM-literal
-    # tree of the array-heavy model DOUBLES query wall (codegen of
-    # thousands of literal nodes dominates), and coalesce(1) is worse
-    # still. Measured: ivfpq 2.03s original vs 4.55s litdf vs 4.78s
-    # coalesce(1) at sf0.1. r13: the parallelize is pinned to ONE
-    # slice (litdf.model_df) — the default 32 near-empty Python
-    # partitions cost ~0.2s per materialization of a 1-row model
-    # (measured numbers at litdf.model_df).
-    from keenwa_spark.litdf import model_df
-
-    return model_df(
+    """The codebook model as ONE row of nested arrays, a sized
+    LocalRelation (litdf.local_df): codebook floats never become plan
+    literals, and the planner sees its size."""
+    return local_df(
         spark,
         [([(s, [(pos, cv) for pos, cv in codes]) for s, codes in enumerate(books)],)],
         "books ARRAY<STRUCT<sub: INT, codes: ARRAY<STRUCT<pos: INT, cv: ARRAY<DOUBLE>>>>>",
@@ -194,12 +189,9 @@ def _model_df(spark, books: Books) -> DataFrame:
 
 
 def _local_model_df(spark, lbooks: "dict[int, Books]") -> DataFrame:
-    """(cid, books) — the per-cell model, broadcast-joined on cid
-    (single-slice Python-RDD route for the same measured reasons as
-    _model_df)."""
-    from keenwa_spark.litdf import model_df
-
-    return model_df(
+    """(cid, books) — the per-cell model, joined on cid (a sized
+    LocalRelation, like _model_df)."""
+    return local_df(
         spark,
         [
             (cid, [(s, [(pos, cv) for pos, cv in codes])
@@ -231,7 +223,7 @@ def _encode_vecs_local(
         if model is None:
             model = _local_model_df(vecs.sparkSession, lbooks)
         return (
-            vecs.join(F.broadcast(model), "cid")
+            vecs.join(model, "cid")
             .withColumn("codes", F.expr(_ENC.format(d=d)))
             .select("vid", "cid", "codes")
         )
@@ -431,7 +423,7 @@ def _encode_vecs(
         if model is None:
             model = _model_df(vecs.sparkSession, books)
         return (
-            vecs.crossJoin(F.broadcast(model))
+            vecs.crossJoin(model)
             .withColumn("codes", F.expr(_ENC.format(d=d)))
             .select("vid", *keep, "codes")
         )
@@ -539,7 +531,7 @@ def pq_search(
     qt = (
         _as_vecs(queries, id_col, vec_col)
         .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(mdf))
+        .crossJoin(mdf)
         .withColumn("tables", F.expr(_TABLES.format(d=d)))
         .select("query_id", "tables")
     )
@@ -567,9 +559,9 @@ def _emit_topk(
     """Shared tail of the ADC searchers: emit the ADC top-k directly,
     or re-rank the ADC top-``refine`` shortlist by exact squared L2
     (broadcast shortlist -> one more corpus scan, no corpus shuffle).
-    The shortlist descends from the model_df query tables, so the
-    planner has no size for it; the query vectors are sized from their
-    scan and left to the planner."""
+    The shortlist's estimate is the query vectors' source scan, which
+    can exceed the corpus side's, so its broadcast stays forced; the
+    join back to the query vectors is left to the planner."""
     if refine is None:
         return ranked.filter(F.col("rnk") <= topk).select(
             "query_id",
@@ -744,11 +736,9 @@ def ivfpq_search(
             emb, k_cells, m, k_codes, iters, id_col, vec_col, train_rows,
             local_books=local_books,
         )
-    from keenwa_spark.litdf import model_df as _small_df
-
     any_books = next(iter(books.values())) if local_books else books
     d = len(any_books[0][0][1])
-    cells_kv = _small_df(
+    cells_kv = local_df(
         spark, [(cid, cv) for cid, cv in cents], "cid INT, cv ARRAY<DOUBLE>"
     )
     # ONE codebook-model frame serves both the corpus encode and the
@@ -764,7 +754,7 @@ def ivfpq_search(
     # corpus crosses the Python boundary once and the interpreted-HOF
     # assign + broadcast residual join disappear; the sql side keeps
     # the unfused broadcast-model chain DELIBERATELY (r14, VERDICT r13
-    # item 5): it exists for pandas/pyarrow-less environments, 'auto'
+    # item 5): it exists for pandas-less environments, 'auto'
     # never picks it at production model sizes (kdim > _SQL_KDIM_MAX
     # resolves numpy), bit-equality with the fused pass is pinned by
     # tests/test_recall.py, and its executed census is on file at
@@ -779,7 +769,7 @@ def ivfpq_search(
     else:
         residual = (
             ivf_assign(emb, cents, id_col, vec_col)
-            .join(F.broadcast(cells_kv), "cid")
+            .join(cells_kv, "cid")
             .withColumn("v", F.expr("zip_with(v, cv, (x, y) -> x - y)"))
             .select("vid", "cid", "v")
         )
@@ -801,13 +791,13 @@ def ivfpq_search(
             )
         ).alias("cid"),
     )
-    qres = probed.join(F.broadcast(cells_kv), "cid").withColumn(
+    qres = probed.join(cells_kv, "cid").withColumn(
         "qv", F.expr("zip_with(qfull, cv, (x, y) -> x - y)")
     )
     if local_books:
-        qres = qres.join(F.broadcast(mdf), "cid")
+        qres = qres.join(mdf, "cid")
     else:
-        qres = qres.crossJoin(F.broadcast(mdf))
+        qres = qres.crossJoin(mdf)
     qt = (
         qres.withColumn("tables", F.expr(_TABLES.format(d=d)))
         .select("query_id", "cid", "tables")
@@ -842,7 +832,7 @@ def pq_save(spark, books: Books, path: str) -> None:
         for s, codes in enumerate(books)
         for pos, cv in codes
     ]
-    spark.createDataFrame(rows, PQ_SCHEMA).coalesce(1).write.mode(
+    local_df(spark, rows, PQ_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 
@@ -873,7 +863,7 @@ def lopq_save(spark, lbooks: "dict[int, Books]", path: str) -> None:
         for s, codes in enumerate(bks)
         for pos, cv in codes
     ]
-    spark.createDataFrame(rows, LOPQ_SCHEMA).coalesce(1).write.mode(
+    local_df(spark, rows, LOPQ_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 

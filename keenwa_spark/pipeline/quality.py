@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.pipeline.dedup import normalized_text
 
 #: simplified URL/email detectors. Anchored to token shape, not RFC
@@ -370,7 +371,7 @@ def zscore_scale(
 
 def fit_quantile_cuts(df: DataFrame, col: str, n_bins: int) -> DataFrame:
     """Shared equi-depth core: the 1-row ``__cuts`` array of exact
-    inner quantiles of non-null ``col``. Consumers broadcast it onto
+    inner quantiles of non-null ``col``. Consumers cross join it onto
     their scan and bin with ``quantile_bin_of`` — keeping the fit and
     the value-on-a-cut-goes-above rule in one place for both the
     histogram (here) and the feature bucketizer (features.py).
@@ -381,22 +382,20 @@ def fit_quantile_cuts(df: DataFrame, col: str, n_bins: int) -> DataFrame:
     used to call) — the aggregate collects every value into one
     aggregator's memory, which was this module's documented 100 TB
     caveat; now the exact cuts scale like any groupBy and the caveat
-    is gone. The cuts come back as literals, so consumers' plans carry
-    them with zero extra joins or aggregates."""
+    is gone. The cuts come back as a one-row sized LocalRelation in one
+    partition: the planner broadcasts it, and with broadcasting off the
+    CartesianProduct keeps the scan's partition count (a
+    ``spark.range(1)`` frame would multiply it by
+    ``defaultParallelism`` at each chained bucketizer)."""
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
     from keenwa_spark.operators.ordered import exact_interpolated_percentiles
 
     probs = [i / n_bins for i in range(1, n_bins)]
     cuts = exact_interpolated_percentiles(df, col, probs)
-    spark = df.sparkSession
-    if not cuts:  # empty input: the old aggregate returned a NULL array
-        return spark.range(1).select(
-            F.lit(None).cast("array<double>").alias("__cuts")
-        )
-    return spark.range(1).select(
-        F.array(*[F.lit(float(c)) for c in cuts]).alias("__cuts")
-    )
+    # empty input: the old aggregate returned a NULL array
+    row = ([float(c) for c in cuts] if cuts else None,)
+    return local_df(df.sparkSession, [row], "__cuts ARRAY<DOUBLE>")
 
 
 def quantile_bin_of(value: Column) -> Column:

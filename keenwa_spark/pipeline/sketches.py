@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from keenwa_spark.litdf import local_df
+
 
 def approx_distinct_bounds(
     df: DataFrame,
@@ -156,9 +158,7 @@ def approx_quantile_bounds(
         # empty input: approx_percentile returns NULL; the rank
         # contract is vacuously satisfied (no value can violate it)
         rows = [(float(p), 0, True) for p in probs]
-        from keenwa_spark.litdf import literal_df
-
-        return literal_df(
+        return local_df(
             df.sparkSession, rows, "prob DOUBLE, n_values BIGINT, rank_ok BOOLEAN"
         )
     # exact rank of each returned value: count of rows <= it, all
@@ -177,9 +177,7 @@ def approx_quantile_bounds(
         # the target rank p*n (+1 slack for the discrete boundary)
         ok = abs(le[f"__le{i}"] - p * n) <= relative_error * n + 1
         out_rows.append((float(p), int(n), bool(ok)))
-    from keenwa_spark.litdf import literal_df
-
-    return literal_df(
+    return local_df(
         df.sparkSession, out_rows, "prob double, n_values bigint, rank_ok boolean"
     )
 

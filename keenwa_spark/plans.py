@@ -30,6 +30,26 @@ def executed_plan_text(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
 
 
+def final_plan_text(df: DataFrame) -> str:
+    """The final tree of the executed plan. An AQE plan that has run
+    prints its Initial Plan after the final one, and a cached frame
+    prints its own Final/Initial pair inside the tree, so cutting at
+    the first ``== Initial Plan ==`` would lose the rest of the outer
+    tree. Instead each Initial Plan block is dropped: the marker line
+    and the lines indented deeper than it."""
+    kept: list[str] = []
+    block = None  # column of the Initial Plan marker being skipped
+    for line in executed_plan_text(df).splitlines():
+        if block is not None and len(line) - len(line.lstrip(" ")) > block:
+            continue
+        block = line.find("+- == Initial Plan ==")
+        if block >= 0:
+            continue
+        block = None
+        kept.append(line)
+    return "\n".join(kept)
+
+
 @dataclass
 class PlanSummary:
     broadcast_joins: int
@@ -126,9 +146,8 @@ def summarize(df: DataFrame) -> PlanSummary:
     # node counts come from the plan TREE (executedPlan.toString — one
     # line per node); the formatted explain would double-count every
     # node in its details section, and a post-execution AQE plan would
-    # double again via the appended Initial Plan, so keep only the
-    # final tree
-    tree = executed_plan_text(df).split("== Initial Plan ==")[0]
+    # double again via the appended Initial Plan
+    tree = final_plan_text(df)
     # pushed-filter evidence lives in the formatted details (full text)
     formatted = explain_text(df)
     return PlanSummary(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.queries import df_query, sql_query
 
 # ---------------------------------------------------------------------------
@@ -956,7 +957,8 @@ sql_query(
     tags=("functions", "superset", "url"),
 )
 def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    urls = spark.createDataFrame(
+    urls = local_df(
+        spark,
         [
             (1, "https://docs.example.com/guide/intro?lang=en&v=2#top"),
             (2, "http://example.org:8080/api/v1/items?id=77"),

@@ -24,13 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StructField,
-    StructType,
-)
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.pipeline.mm_fixtures import (
     ahash_pairs_oracle_sql,
     fixture_images,
@@ -42,16 +37,11 @@ from keenwa_spark.pipeline.mm_fixtures import (
 )
 from keenwa_spark.queries import df_query
 
-_PAYLOAD_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
+_PAYLOAD_SCHEMA = "doc_id BIGINT NOT NULL, payload BINARY NOT NULL"
 
 
 def _image_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(fixture_images(), _PAYLOAD_SCHEMA)
+    return local_df(spark, fixture_images(), _PAYLOAD_SCHEMA)
 
 
 @df_query(
@@ -121,7 +111,7 @@ def pl_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pl_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from keenwa_spark.pipeline.multimodal import explode_video_frames
 
-    vids = spark.createDataFrame(fixture_videos(), _PAYLOAD_SCHEMA)
+    vids = local_df(spark, fixture_videos(), _PAYLOAD_SCHEMA)
     return explode_video_frames(vids).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("frame_idx").cast("bigint").alias("frame_idx"),
@@ -145,7 +135,7 @@ def pl_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pl_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from keenwa_spark.pipeline.multimodal import pcm_features
 
-    pcm = spark.createDataFrame(fixture_pcm(), _PAYLOAD_SCHEMA)
+    pcm = local_df(spark, fixture_pcm(), _PAYLOAD_SCHEMA)
     return pcm_features(pcm, sample_rate=8000).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("n_samples").cast("bigint").alias("n_samples"),

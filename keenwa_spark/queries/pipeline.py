@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from keenwa_spark.litdf import local_df
 from keenwa_spark.pipeline.hashing import MINHASH_AB, MINHASH_P, duck_hash64
 from keenwa_spark.queries import REGISTRY, df_query
 
@@ -1025,8 +1026,8 @@ def pl_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame_sample_plan,
     )
 
-    vids = spark.createDataFrame(
-        fixture_videos(), "doc_id LONG NOT NULL, payload BINARY NOT NULL"
+    vids = local_df(
+        spark, fixture_videos(), "doc_id LONG NOT NULL, payload BINARY NOT NULL"
     )
     sampled = frame_sample_plan(explode_video_frames(vids), every_n=2)
     return sampled.select(

@@ -32,6 +32,22 @@ def test_line_fits_capture_at_worst_case_figures():
     assert not [k for k in body if k.startswith(retired)]
 
 
+def test_cpu_between_drops_processes_that_ended():
+    """A process that ended between two readings (a Python worker the
+    PySpark daemon stopped, whose CPU leaves the tree) counts in
+    neither; one that started in between counts in full, even on a
+    reused pid."""
+    import os
+
+    before = {"self": 1.0, (10, "5"): 3.0, (11, "6"): 275.9}
+    after = {"self": 1.5, (10, "5"): 4.0, (11, "8"): 0.25}
+    assert bench.cpu_between(before, after) == 1.75
+
+    reading = bench.cpu_reading(os.getpid())
+    assert reading["self"] > 0
+    assert [k for k in reading if k != "self" and k[0] == os.getpid()]
+
+
 def test_time_best_of_3_records_wall_and_cpu(views):
     """One tiny headline query through the timing helper: wall and CPU
     are both measured, and the detail's value is the sum of the

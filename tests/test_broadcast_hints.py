@@ -37,44 +37,25 @@ KEPT_BROADCASTS = [
     ("operators/ordered.py", "with_global_rank",
      "an_price_rank_global: unhinted, the join builds on df and adds "
      "1 exchange; gated on the exactly counted distinct domain"),
-    ("pipeline/ivf.py", "_with_cells",
-     "cross join with a model_df frame, which has no size estimate: "
-     "CartesianProduct unhinted at 64 KB (pl_ann_ivf_topk)"),
     ("pipeline/ivf.py", "ivf_search",
-     "probe side descends from the model_df cross join, so it has no "
-     "size estimate: unhinted the corpus side is broadcast at sf0.01 "
-     "and 2 exchanges added at 64 KB (pl_ann_ivf_topk)"),
-    ("pipeline/pq.py", "_encode_vecs_local",
-     "sql backend: the same model_df join as ivfpq_search's local-books "
-     "join (+1 exchange unhinted)"),
-    ("pipeline/pq.py", "_encode_vecs",
-     "sql backend: the same model_df cross join as pq_search's "
-     "(CartesianProduct unhinted at 64 KB)"),
+     "probe side (queries x nprobe cells) descends from the query "
+     "vectors, whose estimate is their source scan's (a Filter keeps "
+     "its child's size): unhinted the corpus side is broadcast at "
+     "sf0.01 and 2 exchanges added at 64 KB (pl_ann_ivf_topk)"),
     ("pipeline/pq.py", "pq_search",
-     "queries x model_df cross join: CartesianProduct unhinted at 64 KB "
-     "(pl_ann_pq_adc_topk)"),
-    ("pipeline/pq.py", "pq_search",
-     "codes x query-table cross join; the tables descend from model_df: "
-     "CartesianProduct unhinted at 64 KB (pl_ann_pq_adc_topk)"),
+     "codes x query-table cross join; the tables carry the query "
+     "vectors' source-scan estimate: CartesianProduct unhinted at 64 KB "
+     "(pl_ann_pq_adc_topk, pl_ann_pq_refined_topk)"),
     ("pipeline/pq.py", "_emit_topk",
-     "the shortlist (queries x refine rows) descends from model_df: "
-     "unhinted the corpus vectors are broadcast at sf0.01 and 1 "
-     "exchange is added at 64 KB (pl_ann_pq_refined_topk)"),
+     "the shortlist (queries x refine rows) carries the query vectors' "
+     "source-scan estimate: unhinted the corpus vectors are broadcast "
+     "at sf0.01 and 1 exchange is added at 64 KB "
+     "(pl_ann_pq_refined_topk, pl_ann_ivfpq_refined_topk)"),
     ("pipeline/pq.py", "ivfpq_search",
-     "sql backend: the residual join on the model_df cells, the same "
-     "join as the probe join (+2 exchanges unhinted)"),
-    ("pipeline/pq.py", "ivfpq_search",
-     "probe join on the model_df cells: +2 exchanges unhinted "
-     "(pl_ann_ivfpq_topk)"),
-    ("pipeline/pq.py", "ivfpq_search",
-     "local-books model_df join: +1 exchange unhinted (pl_ann_lopq_topk)"),
-    ("pipeline/pq.py", "ivfpq_search",
-     "shared-books model_df cross join: CartesianProduct unhinted "
-     "(pl_ann_ivfpq_topk)"),
-    ("pipeline/pq.py", "ivfpq_search",
-     "query tables descend from model_df: unhinted the corpus codes are "
-     "broadcast at sf0.01 and 1-2 exchanges added at 64 KB "
-     "(pl_ann_ivfpq_topk, pl_ann_lopq_topk)"),
+     "query tables (queries x nprobe cells) carry the query vectors' "
+     "source-scan estimate: unhinted the corpus codes are broadcast at "
+     "sf0.01, and at 64 KB the join falls back to a sort-merge join "
+     "with 2 more exchanges (pl_ann_ivfpq_topk, pl_ann_lopq_topk)"),
     ("pipeline/similarity.py", "cosine_topk",
      "non-equi join; the query side's estimate is its source scan's: "
      "CartesianProduct unhinted at 64 KB (pl_ann_cosine_topk)"),
@@ -194,7 +175,7 @@ def test_data_dependent_join_falls_back_to_sort_merge(no_broadcast, duck, name):
     """With broadcasting off, the join whose hint was deleted plans as
     a sort-merge join and the rows still equal the DuckDB oracle."""
     from keenwa_spark.conformance import OracleCase, run_cases
-    from keenwa_spark.plans import executed_plan_text
+    from keenwa_spark.plans import final_plan_text
     from keenwa_spark.queries import load_all
 
     spec = load_all()[name]
@@ -206,7 +187,5 @@ def test_data_dependent_join_falls_back_to_sort_merge(no_broadcast, duck, name):
 
     case = OracleCase(name, build, spec.oracle)
     assert run_cases(SimpleNamespace(case=lambda: case), no_broadcast, duck, 1) == []
-    # cut at the top-level marker only: a cached frame prints its own
-    # nested Final/Initial plan pair inside the final tree
-    plan = executed_plan_text(built[0]).split("\n+- == Initial Plan ==")[0]
+    plan = final_plan_text(built[0])
     assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan

@@ -261,41 +261,38 @@ def test_hint_pins_physical_join_strategy(b):
 
 
 def test_values_compiles_to_local_relation(b):
-    """Scalar inline rows must produce a JVM LocalRelation
-    (LocalTableScan), never the 32-partition Python-RDD relation whose
-    per-partition worker round trips cost ~25s under a join (the
-    round-10 builder-fuzz finding). Non-scalar cells keep the
-    createDataFrame fallback."""
+    """Inline rows, scalar or nested, plan as a JVM LocalRelation
+    (LocalTableScan) under their declared types."""
     df = b.values([(1, "x", None), (2, "y", 3.5)], "id INT, tag STRING, v DOUBLE").build()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     # declared types are honored even for all-NULL cells
     assert df.schema.simpleString() == "struct<id:int,tag:string,v:double>"
-    # fallback path: complex cells still work (and still round-trip)
     arr = b.new_query().values([([1, 2],)], "xs ARRAY<INT>").build()
     assert arr.collect()[0].xs == [1, 2]
+    assert "LocalTableScan" in arr._jdf.queryExecution().executedPlan().toString()
 
 
-def test_literal_df_jvm_only_and_bit_exact(views):
-    """litdf.literal_df: JVM-only plan (no Python evals), float64
-    bit-exactness through F.lit (no text round trip), NULL/empty-array
-    cells, nested struct-in-array schemas. NOTE the measured boundary
-    (round-10 A/B, pinned in pq._model_df's comment): literal trees
-    WIN for small scalar tables but LOSE for array-heavy ANN models —
-    the engine uses litdf only for the former."""
-    from keenwa_spark.litdf import literal_df
+def test_values_timestamps_ignore_the_process_time_zone(b):
+    """A naive datetime cell is read in the session time zone (UTC),
+    like a SQL TIMESTAMP literal, whatever the Python process's TZ.
+    ``createDataFrame(list)`` converts it with the process TZ, which
+    under America/Los_Angeles read it back 8 hours later."""
+    import datetime
+    import os
+    import time
 
-    rows = [(1, [0.1, 2.5e-17, float(2**53 - 1)]), (2, None), (3, [])]
-    df = literal_df(views, rows, "cid INT, cv ARRAY<DOUBLE>")
-    out = {r.cid: r.cv for r in df.collect()}
-    assert out[1] == [0.1, 2.5e-17, float(2**53 - 1)]
-    assert out[2] is None and out[3] == []
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
-    nested = literal_df(
-        views,
-        [([(0, [(1, [0.5])])],)],
-        "books ARRAY<STRUCT<sub: INT, codes: ARRAY<STRUCT<pos: INT, cv: ARRAY<DOUBLE>>>>>",
-    ).collect()
-    assert nested[0].books[0].codes[0].cv == [0.5]
-    assert literal_df(views, [], "x INT").count() == 0
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        dt = datetime.datetime(2020, 1, 2, 3, 4, 5, 123456)
+        df = b.values([([dt],)], "ts ARRAY<TIMESTAMP>").build()
+        got = df.selectExpr("unix_micros(ts[0]) AS us").collect()[0].us
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert got == 1577934245123456

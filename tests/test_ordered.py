@@ -16,7 +16,7 @@ from keenwa_spark.operators.ordered import (
     with_global_prev_min,
     with_global_row_number,
 )
-from keenwa_spark.plans import partitionless_windows
+from keenwa_spark.plans import final_plan_text, partitionless_windows
 
 
 def _executed(df):
@@ -426,9 +426,8 @@ def test_global_rank_join_back_broadcasts_small_domain(vals):
     from keenwa_spark.operators.ordered import with_global_rank
 
     got = with_global_rank(vals, "v", out_col="rk", n_buckets=8)
-    plan = _executed(got)
-    final = plan.split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in final
+    got.collect()
+    assert "BroadcastHashJoin" in final_plan_text(got)
 
 
 def test_mega_tie_bigint_beyond_double_precision(spark):

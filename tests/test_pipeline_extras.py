@@ -604,6 +604,36 @@ class TestFeatureEncoders:
         rows = {r["k"]: r["v_bin"] for r in quantile_bucketize(df, "v", 2).collect()}
         assert rows[2] is None and rows[1] == 0 and rows[3] == 1
 
+    def test_chained_bucketizers_keep_the_partition_count(self, spark):
+        """With broadcasting off, each bucketizer's cross join with its
+        cuts plans a CartesianProduct, whose partitions are the product
+        of its sides'. The one-partition cuts frame keeps the scan's
+        count through a chain; a ``spark.range(1)`` cuts frame
+        multiplied it by ``defaultParallelism`` per bucketizer, so
+        ``pl_rfm_segments`` (three in a row) ran out of time."""
+        from keenwa_spark.pipeline.features import quantile_bucketize
+
+        df = spark.range(0, 40, numPartitions=3).selectExpr(
+            "CAST(id AS DOUBLE) AS v"
+        )
+        keys = (
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.enabled",
+        )
+        saved = [spark.conf.get(k) for k in keys]
+        spark.conf.set(keys[0], "-1")
+        spark.conf.set(keys[1], "false")
+        try:
+            out = quantile_bucketize(df, "v", 2, out_col="a")
+            out = quantile_bucketize(out, "v", 2, out_col="b")
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "CartesianProduct" in plan
+            assert out.rdd.getNumPartitions() == 3
+            assert out.where("a = b").count() == 40
+        finally:
+            for k, v in zip(keys, saved):
+                spark.conf.set(k, v)
+
     def test_robust_scale_outlier_resistance(self, spark):
         from keenwa_spark.pipeline.features import robust_scale
 
@@ -865,15 +895,18 @@ def test_chunk_and_pack_single_exchange(docs):
     """The fusion's point: ONE doc-level Exchange, no chunk-level
     re-shuffle for the packing window."""
     from keenwa_spark.pipeline.packing import chunk_and_pack
-    from keenwa_spark.plans import partitionless_windows
+    from keenwa_spark.plans import (
+        executed_plan_text,
+        final_plan_text,
+        partitionless_windows,
+    )
 
     fused = chunk_and_pack(docs, chunk_tokens=3, overlap=1, seq_len=7, n_shards=4)
     fused.collect()
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
+    final = final_plan_text(fused)
     assert final.count("Exchange hashpartitioning") == 1, final
     assert "BroadcastExchange" not in final
-    assert partitionless_windows(plan) == []
+    assert partitionless_windows(executed_plan_text(fused)) == []
 
 
 def test_chunk_and_pack_zero_overlap_and_short_docs(spark):

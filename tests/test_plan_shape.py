@@ -296,12 +296,12 @@ def test_pq_search_sql_backend_reuses_model_broadcast(views):
     frame — the numpy backend ships the model in the Arrow pass and
     the frame has a single consumer, so there is nothing to reuse):
     the executed plan carries exactly one materialized
-    BroadcastExchange over Scan ExistingRDD[books] and a ReusedExchange
+    BroadcastExchange over LocalTableScan [books] and a ReusedExchange
     at the second consumer. Evidence plan committed at
     plans/r14/pq_search_sql_backend_reused_exchange.txt."""
     import tests.conftest as cf
     from keenwa_spark.pipeline.pq import pq_search
-    from keenwa_spark.plans import executed_plan_text
+    from keenwa_spark.plans import final_plan_text
     from keenwa_spark.queries import load_all
 
     load_all()["pl_ann_pq_refined_topk"].fn(views, cf.SF_DIR)  # views
@@ -311,11 +311,33 @@ def test_pq_search_sql_backend_reuses_model_broadcast(views):
         encode_backend="sql",
     )
     df.collect()
-    plan = executed_plan_text(df).split("== Initial Plan ==")[0]
+    plan = final_plan_text(df)
     assert plan.count("ReusedExchange") == 1, plan
     # one real model broadcast; the other BroadcastExchanges in the
     # plan belong to the query-table and scored-stream joins
-    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert plan.count("LocalTableScan") == 1, plan
+
+
+def test_final_plan_text_keeps_the_tree_after_a_cached_frame(views):
+    """pl_lsh_verified_pairs reads its candidate pairs from a cached
+    frame, which prints its own Final/Initial plan pair inside the
+    executed tree. Both LeftSemi BroadcastHashJoins sit after that
+    nested marker: a cut at the first ``== Initial Plan ==`` loses
+    them. final_plan_text keeps them and drops both Initial Plan
+    blocks."""
+    import re
+
+    import tests.conftest as cf
+    from keenwa_spark.plans import final_plan_text, summarize
+    from keenwa_spark.queries import load_all
+
+    df = load_all()["pl_lsh_verified_pairs"].fn(views, cf.SF_DIR)
+    df.collect()
+    final = final_plan_text(df)
+    assert "== Initial Plan ==" not in final
+    assert "InMemoryRelation" in final and "== Final Plan ==" in final
+    assert len(re.findall(r"BroadcastHashJoin .*, LeftSemi,", final)) == 2, final
+    assert summarize(df).broadcast_joins == final.count("BroadcastHashJoin") == 4
 
 
 def test_scale_md_census_matches_pinned_censuses():

@@ -422,7 +422,7 @@ class TestPqEncodeBackends:
         sequential-over-dims IEEE folds, same lowest-id tie-breaks."""
         from pyspark.sql import functions as F
 
-        from keenwa_spark.litdf import model_df
+        from keenwa_spark.litdf import local_df
         from keenwa_spark.pipeline.ivf import _as_vecs, ivf_assign
         from keenwa_spark.pipeline.pq import (
             _encode_vecs,
@@ -443,13 +443,13 @@ class TestPqEncodeBackends:
                     cents, books, local,
                 ).collect()
             }
-            cells_kv = model_df(
+            cells_kv = local_df(
                 spark, [(cid, cv) for cid, cv in cents],
                 "cid INT, cv ARRAY<DOUBLE>",
             )
             residual = (
                 ivf_assign(cemb, cents, backend="sql")
-                .join(F.broadcast(cells_kv), "cid")
+                .join(cells_kv, "cid")
                 .withColumn("v", F.expr("zip_with(v, cv, (x, y) -> x - y)"))
                 .select("vid", "cid", "v")
             )

@@ -35,8 +35,8 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import jvm_pid  # noqa: E402
-from perfbench.procstat import hwm_mb, self_cpu_s, tree_cpu_s  # noqa: E402
+from bench import cpu_between, cpu_reading, jvm_pid  # noqa: E402
+from perfbench.procstat import hwm_mb  # noqa: E402
 
 STAGE_ROOT = "/tmp/keenwa_scale"
 SCALE_JSON = os.path.join(REPO, "SCALE.json")
@@ -328,11 +328,11 @@ def measure(spark, run, x: int) -> dict:
         group = f"scale_probe-{uuid.uuid4().hex[:12]}"
         sc.setJobGroup(group, group)
         try:
-            cpu0 = tree_cpu_s(pid) + self_cpu_s()
+            cpu0 = cpu_reading(pid)
             t0 = time.perf_counter()
             out = run()
             wall = time.perf_counter() - t0
-            cpu = tree_cpu_s(pid) + self_cpu_s() - cpu0
+            cpu = cpu_between(cpu0, cpu_reading(pid))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         rows, extra_jobs = out if isinstance(out, tuple) else (out, 0)
